@@ -265,6 +265,86 @@ class ChainSpec extends SparkSpec {
     assert(sqErr / n < 0.002, s"mean sqErr=${sqErr / n} over $n contexts")
   }
 
+  /** Canonical digest of a footprint frame: every row rendered as its
+    * comma-joined columns, rows sorted, then SHA-256 over the
+    * newline-joined text. Returned as "rows:first-16-hex". */
+  def golden(df: org.apache.spark.sql.DataFrame): String = {
+    val rows = df.collect().map(_.toSeq.mkString(",")).sorted
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    val hex = md.digest(rows.mkString("\n").getBytes("UTF-8")).map("%02x".format(_)).mkString
+    s"${rows.length}:${hex.take(16)}"
+  }
+
+  // Golden digests of each chained engine, generated before the engines
+  // were folded into one driver. The cogroup-only (tailThreshold = 0) and
+  // tail-only (Long.MaxValue) runs must both reproduce them: the parity
+  // tests above only compare chained paths with each other, so a change
+  // altering both paths the same way would slip past them.
+  val goldenFirstOrder = "1346:96d54608cbd196d5"
+  val goldenNode2vec = "2100:89a565f64f5d2be8"
+  val goldenNode2vecHub = "3600:22bb26b45619f08b"
+  val goldenMetapath = "2064:1f1b61ecf01799d0"
+  val goldenStateful = "1408:3930b4553515b0c3"
+
+  private val paths2 = Seq(0L, Long.MaxValue)
+
+  test("golden digests: firstOrderChained, cogroup-only and tail-only") {
+    val starts = Walk.equalStarts(g, 300)
+    paths2.foreach { t =>
+      assert(golden(Walk.firstOrderChained(g, starts, maxSteps = 8, keepProb = 0.8,
+        seed = 101, buckets = 4, tailThreshold = t)) === goldenFirstOrder, s"tailThreshold=$t")
+    }
+  }
+
+  test("golden digests: node2vecChained, cogroup-only, tail-only and hub crossers") {
+    val starts = Walk.equalStarts(g, 300)
+    paths2.foreach { t =>
+      assert(golden(Walk.node2vecChained(g, starts, maxSteps = 6, p = 2.0, q = 0.5,
+        seed = 103, buckets = 4, tailThreshold = t)) === goldenNode2vec, s"tailThreshold=$t")
+    }
+    // crosserCap = 1: every crossing ships an empty prevNbrs, so the
+    // distributed resolution join (cogroup rounds) and the tail's prev
+    // fetch (mixed run) both re-arm it
+    import spark.implicits._
+    val star = (1L to 99L).flatMap(i => Seq((0L, i, 1.0), (i, 0L, 1.0)))
+    val ring = (1L until 99L).map(i => (i, i + 1, 2.0)) :+ ((99L, 1L, 2.0))
+    val hub = (star ++ ring).toDF("src", "dst", "weight")
+    val hubStarts = Walk.equalStarts(hub, 400)
+    Seq(0L, 150L).foreach { t =>
+      assert(golden(Walk.node2vecChained(hub, hubStarts, maxSteps = 8, p = 2.0, q = 0.5,
+        seed = 107, buckets = 8, crosserCap = 1, tailThreshold = t)) === goldenNode2vecHub,
+        s"tailThreshold=$t")
+    }
+  }
+
+  test("golden digests: metapathChained, cogroup-only and tail-only") {
+    val tg = g.withColumn("etype", pmod(col("src") + col("dst"), lit(3)).cast("int"))
+    val schemes = Seq(
+      Seq(Seq(true, false, true), Seq(false, true, true)),
+      Seq(Seq(true, true, false)))
+    val starts = Walk.equalStarts(tg, 300)
+    paths2.foreach { t =>
+      assert(golden(Walk.metapathChained(tg, starts, schemes, maxSteps = 6, seed = 109,
+        buckets = 4, tailThreshold = t)) === goldenMetapath, s"tailThreshold=$t")
+    }
+  }
+
+  test("golden digests: genericStatefulChained keeps the state column") {
+    implicit val enc = org.apache.spark.sql.Encoders.scalaLong
+    val cfg = Walk.StatefulConfig[Long](
+      init = (wid, v) => wid * 31L + v,
+      bias = (_, st, _, dst, _, _) => if ((st + dst) % 3 == 0) 2.0 else 1.0,
+      update = (st, _, _, nxt) => st * 1099511628211L + nxt,
+      extension = (_, st, _) => if (st % 13 == 0) 0.0 else 0.9)
+    val starts = Walk.equalStarts(g, 300)
+    paths2.foreach { t =>
+      val fp = Walk.genericStatefulChained(g, starts, maxSteps = 8, cfg, seed = 113,
+        buckets = 4, tailThreshold = t)
+      assert(fp.columns.toSeq === Seq("walkerId", "step", "vertex", "state"))
+      assert(golden(fp) === goldenStateful, s"tailThreshold=$t")
+    }
+  }
+
   test("chaining actually chains on chain-shaped graphs (few outer rounds)") {
     import spark.implicits._
     // one long path graph: all steps should complete in ~1 outer round
