@@ -131,7 +131,8 @@ object PageRank {
     // recompile cost exceeded the saved job), and broadcasting a
     // LocalTableScan launches no job at all — one Spark job and one
     // checkpoint scan fewer per iteration. The summed double is the SAME
-    // aggregate the subquery computed, bit-for-bit through the metric row.
+    // aggregate the subquery computed, equal up to floating-point
+    // summation order through the metric row.
     val dmassAgg =
       coalesce(sum(when(!col("hasOut"), col("rank"))), lit(0.0)).as("dmass")
     val dmassSchema = new org.apache.spark.sql.types.StructType()

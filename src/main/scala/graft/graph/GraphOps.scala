@@ -2,8 +2,9 @@ package graft.graph
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.model.{AdjRow, EdgeRow, VertexDeg}
+import graft.model.{AdjRow, CsrRow, EdgeRow, VertexDeg}
 import org.apache.spark.storage.StorageLevel
+import scala.reflect.runtime.universe.TypeTag
 
 /** Graph-substrate operators over the (src, dst, weight) edge table:
   * degrees, vertex extraction, undirected view, and the Spark-native CSR
@@ -110,7 +111,7 @@ object GraphOps {
   private val adjCache = new java.util.concurrent.ConcurrentHashMap[
     (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan), DataFrame]()
   private val bucketAdjCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long), DataFrame]()
+    (SparkSession, org.apache.spark.sql.catalyst.plans.logical.LogicalPlan, Long), BucketedCsr]()
 
   /** [[adjacency]] as a persisted, v-partitioned, within-partition-sorted
     * DataFrame, built once per (session, edge plan). Callers MUST NOT
@@ -133,16 +134,47 @@ object GraphOps {
     })
   }
 
-  /** Bucketed CSR for the chained walk kernels: (bucket = v / rangeSize,
-    * v, AdjRow), persisted once per (session, edge plan, rangeSize).
+  /** A bucketed CSR: (bucket = v / rangeSize, v, adj) rows, persisted,
+    * with the row count and the degree sum taken by the one action that
+    * materialized it. The chained driver tail reads both to decide
+    * whether the whole CSR fits driver memory before it collects a row. */
+  final case class BucketedCsr(df: DataFrame, rows: Long, nbrs: Long)
+
+  /** The bucketed CSR builder for every chained walk family, over any
+    * per-vertex row flavour.
     *
     * `v` is lifted to a TOP-LEVEL column and partitions are sorted by it:
     * cached-batch min/max stats exist only for top-level attributes, so a
     * vertex-level IN-set filter (the chained driver tail's adjacency
     * fetch) prunes whole batches instead of decompressing the full CSR —
     * struct-field or bucket-level predicates can't get below bucket
-    * granularity. */
-  def bucketedAdjacencyCached(edges: DataFrame, rangeSize: Long): DataFrame = {
+    * granularity.
+    *
+    * r6: hash-partitioned by bucket BEFORE persisting — the chained
+    * kernels' cogroups key the CSR side on this very column
+    * (relationally, Walk.bucketKeyed), so the cached partitioning
+    * satisfies the cogroup's distribution and the CSR is shuffled ONCE at
+    * build instead of once per walk call (guide §2.4: "two operations
+    * keyed the same way can share one exchange"). The bucket key is the
+    * exact Long division the walk kernels use. */
+  def bucketed[A <: CsrRow : TypeTag](rows: Dataset[A], rangeSize: Long): BucketedCsr = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    val df = rows
+      .map(a => (a.v / rangeSize, a.v, a))
+      .toDF("bucket", "v", "adj")
+      .repartition(col("bucket"))
+      .sortWithinPartitions("v")
+      .persist(StorageLevel.MEMORY_AND_DISK_SER)
+    // one aggregate materializes the cache and sizes it
+    val stats = df.agg(count(lit(1)), coalesce(sum(size(col("adj.nbrs"))), lit(0L))).head()
+    BucketedCsr(df, stats.getLong(0), stats.getLong(1))
+  }
+
+  /** [[bucketed]] over [[adjacency]], persisted once per (session, edge
+    * plan, rangeSize). Callers MUST NOT unpersist it — release via
+    * [[clearAdjacencyCache]]. */
+  def bucketedCsrCached(edges: DataFrame, rangeSize: Long): BucketedCsr = {
     val spark = edges.sparkSession
     import spark.implicits._
     val canonical = edges.queryExecution.analyzed.canonicalized
@@ -160,27 +192,18 @@ object GraphOps {
         case Some(cached) => cached.as[AdjRow]
         case None => adjacency(edges)
       }
-      // r6: hash-partitioned by bucket BEFORE persisting — the chained
-      // kernels' cogroups key the CSR side on this very column
-      // (relationally, Walk.bucketKeyed), so the cached partitioning
-      // satisfies the cogroup's distribution and the CSR is shuffled
-      // ONCE at build instead of once per walk call (guide §2.4:
-      // "two operations keyed the same way can share one exchange").
-      val df = source
-        .map(a => (a.v / rangeSize, a.v, a))
-        .toDF("bucket", "v", "adj")
-        .repartition(col("bucket"))
-        .sortWithinPartitions("v")
-        .persist(StorageLevel.MEMORY_AND_DISK_SER)
-      df.count()
-      df
+      bucketed(source, rangeSize)
     })
   }
+
+  /** The DataFrame of [[bucketedCsrCached]]. */
+  def bucketedAdjacencyCached(edges: DataFrame, rangeSize: Long): DataFrame =
+    bucketedCsrCached(edges, rangeSize).df
 
   def clearAdjacencyCache(): Unit = {
     adjCache.values.forEach(df => { df.unpersist(false); () })
     adjCache.clear()
-    bucketAdjCache.values.forEach(df => { df.unpersist(false); () })
+    bucketAdjCache.values.forEach(c => { c.df.unpersist(false); () })
     bucketAdjCache.clear()
   }
 

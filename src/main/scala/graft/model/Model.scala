@@ -33,6 +33,14 @@ final case class EdgeRow(src: Long, dst: Long, weight: Double)
 final case class VertexDeg(
     v: Long, outDeg: Long, inDeg: Long, outW: Double, inW: Double)
 
+/** What every per-vertex CSR row shares: its vertex and its neighbour
+  * ids, sorted ascending. The bucketed CSR builder and the chained walk
+  * driver work on any row flavour through it. */
+trait CsrRow {
+  def v: Long
+  def nbrs: Array[Long]
+}
+
 /** Per-vertex adjacency row: the Spark-native CSR block. `nbrs` is sorted
   * ascending (enables array_contains / binary search, cf. reference
   * src/apps/node2vec.hpp:122-125); `prob`/`alias` are the Vose alias table
@@ -43,7 +51,7 @@ final case class AdjRow(
     nbrs: Array[Long],
     wts: Array[Double],
     prob: Array[Double],
-    alias: Array[Int])
+    alias: Array[Int]) extends CsrRow
 
 /** Adjacency row carrying per-edge types for metapath walks (reference
   * src/apps/metascheme.hpp: scheme masks select sub-adjacencies by edge
@@ -53,7 +61,7 @@ final case class TypedAdjRow(
     v: Long,
     nbrs: Array[Long],
     wts: Array[Double],
-    etypes: Array[Int])
+    etypes: Array[Int]) extends CsrRow
 
 /** Adjacency row carrying opaque per-edge user data for the stateful
   * walk engines (reference `edge_data_t`, include/type.hpp:43-62). Like
@@ -63,7 +71,7 @@ final case class EdataAdjRow(
     v: Long,
     nbrs: Array[Long],
     wts: Array[Double],
-    edatas: Array[Long])
+    edatas: Array[Long]) extends CsrRow
 
 /** A walker in flight (reference include/walk.hpp:31-50): `prevV` carries
   * second-order state (node2vec's previous_vertex). */

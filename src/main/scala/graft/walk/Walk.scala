@@ -449,17 +449,8 @@ object Walk {
     val spark = edges.sparkSession
     import spark.implicits._
 
-    val eData =
-      if (edges.columns.contains("edata")) edges
-      else edges.withColumn("edata", lit(0L))
-    // neighbour order: sorted by dst — identical to GraphOps.adjacency
-    // and the metapath adjacency, so samplers see the same candidate
-    // order; serialized+spillable storage like every other CSR cache
-    val adj = eData
-      .groupBy(col("src").as("v"))
-      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("edata")))).as("a"))
-      .select(col("v"), col("a.dst").as("nbrs"), col("a.weight").as("wts"),
-        col("a.edata").as("edatas"))
+    // serialized+spillable storage like every other CSR cache
+    val adj = edataRows(edges)
       .repartition(col("v"))
       .sortWithinPartitions("v")
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -471,16 +462,8 @@ object Walk {
     val unbiased = config.static == StaticComp.Unbiased
     val cfg = config
 
-    // a val (not a local def): local defs lift onto Walk$, and a closure
-    // calling one would have to serialize the whole module
     val seedL = seed
-    val rnd: (Long, Int, String, Long) => Double =
-      if (portableRng)
-        (wid, step, salt, _) =>
-          graft.text.TextOps.h64jvm(s"$seedL:$wid:$step:$salt").toDouble /
-            1152921504606846976.0 // 2^60 — exact twin of randP
-      else
-        (wid, step, _, saltId) => Walk.jvmRand(seedL, wid, step, saltId)
+    val rnd = statefulRng(seed, portableRng)
 
     def asFp(f: Dataset[(Long, Int, Long, S)]): DataFrame =
       f.toDF("walkerId", "step", "vertex", "state")
@@ -679,7 +662,8 @@ object Walk {
     * same partition-independent (seed, walkerId, step, salt) streams and
     * filter/scan candidates in the same order — WalkerStateSpec asserts
     * footprints AND threaded states are equal across engines and bucket
-    * counts. */
+    * counts. Runs on the chained driver ([[runChained]]) with
+    * [[StatefulChain]]'s kernel. */
   def genericStatefulChained[S](
       edges: DataFrame,               // (src, dst, weight[, edata: long])
       starts: DataFrame,              // (walkerId, curV)
@@ -691,198 +675,9 @@ object Walk {
       buckets: Int = 0,
       tailThreshold: Long = LightModeThreshold,
       store: Option[graft.engine.Iterate.CheckpointStore] = None,
-      runName: String = "chain-gs")(implicit senc: Encoder[S]): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val nBuckets =
-      if (buckets > 0) buckets else math.max(spark.sparkContext.defaultParallelism * 2, 4)
-    val maxV = edges.agg(greatest(max("src"), max("dst"))).head().getLong(0)
-    val rangeSize = math.max(1L, maxV / nBuckets + 1)
-
-    val eData =
-      if (edges.columns.contains("edata")) edges
-      else edges.withColumn("edata", lit(0L))
-    // same sorted neighbour order as genericStateful's CSR — parity of
-    // candidate scan order is part of the bitwise contract; v top-level +
-    // sorted for the tail's pruned fetches (see
-    // GraphOps.bucketedAdjacencyCached)
-    val adjDf = eData
-      .groupBy(col("src").as("v"))
-      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("edata")))).as("a"))
-      .select(col("v"), col("a.dst").as("nbrs"), col("a.weight").as("wts"),
-        col("a.edata").as("edatas"))
-      .as[graft.model.EdataAdjRow]
-      .map(a => (a.v / rangeSize, a.v, a))
-      .toDF("bucket", "v", "adj")
-      .repartition(col("bucket")) // shuffled once at build — see bucketKeyed
-      .sortWithinPartitions("v")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    adjDf.count()
-    def typedAdj(df: DataFrame) = bucketKeyed[graft.model.EdataAdjRow](df)
-    val adjB = typedAdj(adjDf)
-
-    val unbiased = config.static == StaticComp.Unbiased
-    val cfg = config
-    val seedL = seed
-    // same RNG streams as genericStateful (see its scaladoc)
-    val rnd: (Long, Int, String, Long) => Double =
-      if (portableRng)
-        (wid, step, salt, _) =>
-          graft.text.TextOps.h64jvm(s"$seedL:$wid:$step:$salt").toDouble /
-            1152921504606846976.0 // 2^60
-      else
-        (wid, step, _, saltId) => Walk.jvmRand(seedL, wid, step, saltId)
-
-    implicit val fEnc: Encoder[(Long, Int, Long, S)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong, senc)
-    implicit val oEnc: Encoder[(Long, Int, Long, S, Boolean)] =
-      Encoders.tuple(Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong, senc,
-        Encoders.scalaBoolean)
-
-    // durable round-trip back to the typed frontier — the stored round's
-    // named columns map to the tuple encoder's _1.._4 (S round-trips
-    // through Parquet for any product/primitive encoder, exactly as in
-    // genericStateful's asTyped)
-    def typedFrontier(df: DataFrame): Dataset[(Long, Int, Long, S)] =
-      df.select(col("walkerId").as("_1"), col("step").as("_2"),
-        col("vertex").as("_3"), col("state").as("_4")).as[(Long, Int, Long, S)]
-
-    // user lambdas (init/bias/update/extension) cannot be fingerprinted —
-    // keeping them stable across resumes is the caller's contract
-    val run = new DurableChainedRun(spark, store, runName,
-      s"genericStatefulChained seed=$seed portable=$portableRng salt=$sampleSalt " +
-        s"static=${config.static} maxSteps=$maxSteps " +
-        s"startsFp=${startsFingerprint(starts)}")
-    val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var outer = 0
-    var frontier: Dataset[(Long, Int, Long, S)] = run.resume() match {
-      case Some((rounds, hi)) =>
-        rounds.zipWithIndex.foreach { case (df, r) =>
-          history += (if (r == 0) df else df.filter(!col("moved")))
-            .select(col("walkerId"), col("step"), col("vertex"), col("state"))
-        }
-        outer = hi
-        typedFrontier(rounds.last.filter(col("moved")))
-      case None =>
-        val f0 = starts
-          .select(col("walkerId"), col("curV")).as[(Long, Long)]
-          .map { case (wid, v) => (wid, 0, v, cfg.init(wid, v)) }
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        history += f0.toDF("walkerId", "step", "vertex", "state")
-        if (run.durable)
-          run.commitRound(0, f0.toDF("walkerId", "step", "vertex", "state")
-            .withColumn("moved", lit(true)), roundCaches)
-        f0
-    }
-    var active = frontier.count()
-    try {
-      while (active > 0 && outer <= maxSteps) {
-        if (active <= tailThreshold) {
-          // driver-local tail — see chainedDriverTail; the typed state S
-          // rides the collected tuples, and the user lambdas run on the
-          // driver exactly as they run inside the cogroup kernel
-          val foot = chainedDriverTail[(Long, Int, Long, S),
-              graft.model.EdataAdjRow, (Long, Int, Long, S)](
-            frontier.collect(),
-            neededOf = w => Seq(w._3),
-            fetch = vs => fetchByVertex(adjDf, vs)(_.as[graft.model.EdataAdjRow].collect()),
-            fetchAll = lim =>
-              fetchAllRows(adjDf, lim)(_.as[graft.model.EdataAdjRow].collect()),
-            vOf = _.v,
-            degOf = _.nbrs.length,
-            advance = { (w, look) =>
-              val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, S)]()
-              var (walkerId, step, cur, state) = w
-              var parked: Option[(Long, Int, Long, S)] = None
-              var done = false
-              while (!done && step < maxSteps) {
-                look(cur) match {
-                  case TailUnfetched =>
-                    parked = Some((walkerId, step, cur, state)); done = true
-                  case TailDangling => done = true
-                  case TailHave(a) =>
-                    val (nxt, st2) = statefulStepKernel(a, walkerId, step, state,
-                      cfg, unbiased, rnd, sampleSalt)
-                    if (nxt < 0) done = true
-                    else {
-                      state = st2
-                      step += 1
-                      cur = nxt
-                      rows += ((walkerId, step, cur, state))
-                    }
-                }
-              }
-              (rows.toSeq, parked)
-            },
-            label = "chain-gs")
-          val footDf = spark.createDataset(foot)(fEnc)
-            .toDF("walkerId", "step", "vertex", "state")
-          history += (if (run.durable)
-            run.commitRound(outer + 1, footDf.withColumn("moved", lit(false)),
-                roundCaches)
-              .select(col("walkerId"), col("step"), col("vertex"), col("state"))
-          else footDf)
-          active = 0
-        } else {
-          val grouped = frontier.groupByKey(_._3 / rangeSize)
-          // live-bucket CSR prune — see prunedAdjRound
-          val adjRound = prunedAdjRound(adjDf, frontier.map(_._3 / rangeSize)
-                .distinct().collect(),
-              engage = outer >= 1 || active < BucketPruneThreshold, nBuckets)
-            .map(typedAdj).getOrElse(adjB)
-          val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
-            val csr = new scala.collection.mutable.HashMap[Long, graft.model.EdataAdjRow]
-            adjIt.foreach { case (_, a) => csr.update(a.v, a) }
-            ws.flatMap { case (walkerId, step0, v0, state0) =>
-              val rows =
-                scala.collection.mutable.ArrayBuffer[(Long, Int, Long, S, Boolean)]()
-              var step = step0
-              var cur = v0
-              var state = state0
-              var done = false
-              while (!done && step < maxSteps && cur / rangeSize == bucket) {
-                csr.get(cur) match {
-                  case None => done = true // dangling: terminate
-                  case Some(a) =>
-                    val (nxt, st2) = statefulStepKernel(a, walkerId, step, state,
-                      cfg, unbiased, rnd, sampleSalt)
-                    if (nxt < 0) done = true
-                    else {
-                      state = st2
-                      step += 1
-                      cur = nxt
-                      rows += ((walkerId, step, cur, state, false)) // footprint
-                    }
-                }
-              }
-              if (!done && step < maxSteps && cur / rangeSize != bucket)
-                rows += ((walkerId, step, cur, state, true)) // crossed: re-shuffle
-              rows
-            }
-          }.toDF("walkerId", "step", "vertex", "state", "moved")
-          // r4 round shape — see firstOrderChained/sealChained (durable
-          // runs commit the round's Parquet instead of the cache)
-          val outP = run.commitRound(outer + 1, out, roundCaches)
-          history += outP.filter(!col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex"), col("state"))
-          val (f2, n) = truncateRealCounted(typedFrontier(outP.filter(col("moved"))))
-          frontier = f2
-          outer += 1
-          active = n
-          System.err.println(s"[graft:chain-gs] outer=$outer active=$active")
-        }
-      }
-      sealChained(history.toSeq, roundCaches.toSeq)
-    } catch {
-      case e: Throwable =>
-        roundCaches.foreach(_.unpersist(false))
-        throw e
-    } finally {
-      // run-local CSR: always released, also when a round throws (ADVICE r4)
-      adjDf.unpersist(false)
-    }
-  }
+      runName: String = "chain-gs")(implicit senc: Encoder[S]): DataFrame =
+    runChained(new StatefulChain(config, seed, portableRng, sampleSalt, senc),
+      edges, starts, maxSteps, buckets, tailThreshold, store, runName).footprints
 
   /** [[metapath]] re-expressed on the generic stateful API — proof that
     * `walker_data_t` subsumes the metapath app (the reference carries
@@ -942,6 +737,42 @@ object Walk {
       .join(indexed, "idx")
       .select(col("walkerId"), col("v").as("curV"))
   }
+
+  /** Per-vertex rows (v, nbrs, wts, edatas) of the stateful engines'
+    * CSR, `edata` 0 when the edge table has none. Neighbours sorted by
+    * dst — identical to GraphOps.adjacency and [[typedRows]], so every
+    * sampler sees the same candidate order. */
+  private def edataRows(edges: DataFrame): DataFrame =
+    (if (edges.columns.contains("edata")) edges else edges.withColumn("edata", lit(0L)))
+      .groupBy(col("src").as("v"))
+      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("edata")))).as("a"))
+      .select(col("v"), col("a.dst").as("nbrs"), col("a.weight").as("wts"),
+        col("a.edata").as("edatas"))
+
+  /** Per-vertex rows (v, nbrs, wts, etypes) of the metapath engines' CSR,
+    * neighbours sorted by dst; the masked inverse-CDF walks this order. */
+  private def typedRows(edges: DataFrame): DataFrame =
+    edges
+      .groupBy(col("src").as("v"))
+      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("etype")))).as("a"))
+      .select(col("v"), col("a.dst").as("nbrs"), col("a.weight").as("wts"),
+        col("a.etype").as("etypes"))
+
+  /** Manifest rendering of metapath schemes: one 0/1 string per mask. */
+  private def schemeString(schemes: Seq[Seq[Seq[Boolean]]]): String =
+    schemes.map(_.map(_.map(b => if (b) '1' else '0').mkString).mkString("+")).mkString(",")
+
+  /** The stateful engines' RNG: (walkerId, step, salt, saltId) → U[0,1),
+    * keyed on (seed, walkerId, step) only; `portableRng` selects the md5
+    * stream shared with the column engines. A function value, so the
+    * closures calling it never ship the Walk module. */
+  private def statefulRng(seed: Long, portableRng: Boolean): (Long, Int, String, Long) => Double =
+    if (portableRng)
+      (wid, step, salt, _) =>
+        graft.text.TextOps.h64jvm(s"$seed:$wid:$step:$salt").toDouble /
+          1152921504606846976.0 // 2^60 — exact twin of randP
+    else
+      (wid, step, _, saltId) => Walk.jvmRand(seed, wid, step, saltId)
 
   /** Frontier size below which the walk switches to "light mode": the
     * tiny frontier is broadcast, so the per-step join needs NO exchange
@@ -1018,10 +849,10 @@ object Walk {
   /** Driver-tail adjacency lookup outcome: the local map either has the
     * row, proved the vertex dangling (a fetch asked for it and the CSR
     * returned nothing — no out-edges), or hasn't fetched it yet. */
-  private sealed trait TailAdj[+A]
-  private final case class TailHave[A](a: A) extends TailAdj[A]
-  private case object TailDangling extends TailAdj[Nothing]
-  private case object TailUnfetched extends TailAdj[Nothing]
+  private[graft] sealed trait TailAdj[+A]
+  private[graft] final case class TailHave[A](a: A) extends TailAdj[A]
+  private[graft] case object TailDangling extends TailAdj[Nothing]
+  private[graft] case object TailUnfetched extends TailAdj[Nothing]
 
   /** Vertex-level IN-set fetch against a persisted CSR keyed by top-level
     * sorted `v`: reads o(|CSR|) rows via cached-batch min/max pruning.
@@ -1046,125 +877,115 @@ object Walk {
     }
   }
 
-  /** Driver-local tail for the chained kernels — the chained analogue of
+  /** Whole-CSR row cap for the driver tail's one-shot probe (r6): when
+    * the ENTIRE bucketed CSR fits this many rows, the tail fetches it
+    * once and never parks a walker again — the whole tail costs ONE
+    * Spark job instead of ~one vertex-level fetch per step (the scattered
+    * tool-edge jumps otherwise discover a new vertex set every pass). */
+  val TailProbeRowCap: Int = 262144
+
+  /** What one driver tail did: walkers it finished, Spark fetches it
+    * made, CSR rows its whole-CSR probe collected (0 when it did not
+    * probe), and footprints it produced. */
+  private[graft] final case class TailTally(
+      walkers: Int, fetches: Int, probeRows: Int, footprints: Int)
+
+  /** Driver-local tail of the chained driver — the chained analogue of
     * the join engines' light mode (reference include/walk.hpp:934: comm
     * drops to a skeleton crew when active < 4000; its local chaining
     * never re-ships the graph, include/walk.hpp:1056-1063).
     *
-    * When the crosser frontier fits [[LightModeThreshold]], a cogroup
-    * round still shipped the whole bucketed CSR through the exchange to
+    * When the crosser frontier fits the tail threshold, a cogroup round
+    * still shipped the whole bucketed CSR through the exchange to
     * advance a handful of walkers — a fixed o(|E|) cost per tail round
     * that erased the chaining win (BENCH r4: node2vec_chained efficiency
     * 0.41, 60-70% of the phase). Here instead: collect the frontier,
     * then loop — fetch the adjacency rows of exactly the vertices the
-    * walkers stand on (vertex-pruned scan of the persisted CSR: zero
+    * walkers need (vertex-pruned scan of the persisted CSR: zero
     * shuffle, o(|CSR|) rows), and advance every walker driver-side with
-    * the SAME step kernel the cogroup path runs, until it terminates,
-    * exhausts maxSteps, or reaches an unfetched vertex (→ next fetch).
-    * Fetched rows accumulate in a budget-bounded local map, so walkers
-    * circling a neighbourhood never refetch it.
+    * the SAME stepping loop and kernel the cogroup path runs
+    * ([[chainSteps]]), until it terminates, exhausts maxSteps, or
+    * reaches an unfetched vertex (→ next fetch). Fetched rows accumulate
+    * in a budget-bounded local map, so walkers circling a neighbourhood
+    * never refetch it.
+    *
+    * The first fetch may instead be one whole-CSR probe. It runs only
+    * when the CSR's row count (≤ `probeRowCap`) and degree sum
+    * (≤ [[TailNbrBudget]]), both taken when the CSR was built, say the
+    * whole CSR fits — so the probe never collects more than the tail may
+    * hold. Otherwise the tail stays on vertex-pruned fetches.
     *
     * Bitwise parity with the cogroup path holds by construction: both
-    * call the same per-step kernel, and the RNG keys on (seed, walkerId,
-    * step) only.
-    *
-    * @param advance chain one walker against the lookup; returns its new
-    *                footprint rows plus Some(parked walker) iff it
-    *                stopped on a TailUnfetched vertex */
-  /** Whole-CSR row cap for the tail's one-shot probe (r6): when the
-    * ENTIRE bucketed CSR fits this many rows, the tail fetches it once
-    * and never parks a walker again — the whole tail costs ONE Spark job
-    * instead of ~one vertex-level fetch per step (the scattered tool-edge
-    * jumps otherwise discover a new vertex set every pass). The probe
-    * asks for cap+1 rows through a limit, so at 100 TB it reads a bounded
-    * prefix, notices the overflow, and the tail stays on vertex-pruned
-    * IN-set fetches exactly as before. The row cap is a first bound; the
-    * REAL memory bound is [[TailNbrBudget]], enforced row-by-row during
-    * the insert — a hub-heavy prefix aborts the full-fetch attempt (the
-    * rows inserted so far stay valid) and the tail continues vertex-
-    * pruned. */
-  // var (not val) as a test hook: R06OptSpec pins it to 0 to force the
-  // overflow branch (vertex-pruned IN-set fetches) at test scale and
-  // asserts bitwise equality with the full-fetch path
-  @volatile var TailFullFetchRowCap: Int = 262144
-
-  private def chainedDriverTail[W: scala.reflect.ClassTag, A, F](
+    * run the same kernel, and the RNG keys on (seed, walkerId, step)
+    * only. Returns the footprint walkers and the tail's tally. */
+  private def chainedDriverTail[W, A <: graft.model.CsrRow](
       walkers0: Array[W],
-      neededOf: W => Seq[Long],
-      fetch: Seq[Long] => Array[A],
-      fetchAll: Int => Array[A],
-      vOf: A => Long,
-      degOf: A => Int,
-      advance: (W, Long => TailAdj[A]) => (Seq[F], Option[W]),
-      label: String): Seq[F] = {
+      fam: ChainedFamily[W, A],
+      adj: GraphOps.BucketedCsr,
+      maxSteps: Int,
+      probeRowCap: Int): (Seq[W], TailTally) = {
+    implicit val rowEnc: Encoder[A] = fam.rowEncoder
     val csr = new scala.collection.mutable.HashMap[Long, A]()
     val dangling = new scala.collection.mutable.HashSet[Long]()
     // true once the FULL CSR sits in `csr`: absence proves a vertex
     // dangling, no walker parks again, no further fetches can occur
     var allFetched = false
-    var triedFull = false
+    var probe = adj.rows <= probeRowCap && adj.nbrs <= TailNbrBudget
+    var probeRows = 0
     var nbrBudget = 0L
-    var live = walkers0
-    val out = new scala.collection.mutable.ArrayBuffer[F]()
+    var live: Seq[W] = walkers0.toSeq
+    val out = new scala.collection.mutable.ArrayBuffer[W]()
     var fetches = 0
     while (live.nonEmpty) {
       val needed =
         if (allFetched) Seq.empty
-        else live.iterator.flatMap(neededOf)
+        else live.iterator.flatMap(fam.tailNeeds)
           .filter(v => !csr.contains(v) && !dangling(v)).toSet.toSeq
       if (needed.nonEmpty) {
-        if (nbrBudget > TailNbrBudget) {
-          // refetch-on-demand eviction: parked walkers re-request what
-          // they still need; shared hub arrays stay alive via walker refs
-          // (cannot fire after a successful full fetch — needed is empty)
-          csr.clear(); nbrBudget = 0L
-        }
-        var served = false
-        if (!triedFull) {
-          triedFull = true
-          val rows = fetchAll(TailFullFetchRowCap + 1)
-          fetches += 1
-          if (rows.length <= TailFullFetchRowCap) {
-            var i = 0
-            var fits = true
-            while (i < rows.length && fits) {
-              val a = rows(i)
-              csr.update(vOf(a), a)
-              nbrBudget += degOf(a)
-              if (nbrBudget > TailNbrBudget) fits = false // abort: rows kept, not "all"
-              i += 1
-            }
-            allFetched = fits
-            served = fits
-          } // else: CSR too large to hold driver-side — vertex mode below
-        }
-        if (!served) {
-          fetch(needed).foreach { a => csr.update(vOf(a), a); nbrBudget += degOf(a) }
+        if (probe) {
+          probe = false
+          val rows = fetchAllRows(adj.df, probeRowCap + 1)(_.as[A].collect())
+          rows.foreach(a => csr.update(a.v, a))
+          probeRows = rows.length
+          allFetched = true
+        } else {
+          if (nbrBudget > TailNbrBudget) {
+            // refetch-on-demand eviction: parked walkers re-request what
+            // they still need; shared hub arrays stay alive via walker refs
+            csr.clear(); nbrBudget = 0L
+          }
+          fetchByVertex(adj.df, needed)(_.as[A].collect())
+            .foreach { a => csr.update(a.v, a); nbrBudget += a.nbrs.length }
           needed.foreach(v => if (!csr.contains(v)) { dangling += v; () })
-          fetches += 1
         }
+        fetches += 1
       }
-      val lookup: Long => TailAdj[A] = v =>
+      val look: Long => TailAdj[A] = v =>
         csr.get(v) match {
           case Some(a) => TailHave(a)
-          case None =>
-            if (dangling(v) || allFetched) TailDangling else TailUnfetched
+          case None => if (dangling(v) || allFetched) TailDangling else TailUnfetched
         }
-      live = live.flatMap { w =>
-        val (foot, parked) = advance(w, lookup)
-        out ++= foot
-        parked
+      // a walker left below maxSteps stopped on an unfetched vertex: parked
+      live = live.flatMap { w0 =>
+        fam.tailRearm(w0, look) match {
+          case TailHave(w) =>
+            chainSteps(fam, maxSteps, w, look, _ => true)(out += _)
+              .filter(fam.stepOf(_) < maxSteps)
+          case TailUnfetched => Some(w0)
+          case TailDangling => None
+        }
       }
     }
+    val tally = TailTally(walkers0.length, fetches, probeRows, out.length)
     System.err.println(
-      s"[graft:$label] driver tail: ${walkers0.length} walkers finished in " +
-        s"$fetches pruned fetches, ${out.length} footprints, zero exchange")
-    out.toSeq
+      s"[graft:${fam.label}] driver tail: ${tally.walkers} walkers finished in " +
+        s"${tally.fetches} fetches (probe rows ${tally.probeRows}), " +
+        s"${tally.footprints} footprints, zero exchange")
+    (out.toSeq, tally)
   }
 
-  /** One-shot capped CSR probe for the driver tail: the persisted
-    * bucketed CSR through a row limit, so an at-scale CSR reads only a
-    * bounded prefix before the overflow is noticed. */
+  /** One-shot CSR probe for the driver tail: the persisted bucketed CSR
+    * through a row limit, so the collect never exceeds the cap. */
   private def fetchAllRows[A](
       adjDf: DataFrame, limit: Int)(
       collect: DataFrame => Array[A]): Array[A] =
@@ -1190,7 +1011,7 @@ object Walk {
       .groupBy(col("_1").as("value"))
       .as[Long, (Long, A)](Encoders.scalaLong, tup)
 
-  /** The live-bucket CSR prune shared by the four chained kernels: rounds
+  /** The chained driver's live-bucket CSR prune: rounds
     * ≥ 1 hold only bucket-crossers, so the CSR side shrinks to their live
     * buckets instead of re-shipping the whole adjacency per outer round
     * (round 0 prunes too when the start frontier is already small). The
@@ -1202,8 +1023,7 @@ object Walk {
     * round's plan and square sizeInBytes per round (see truncateReal).
     * When the live set spans most buckets the prune buys nothing — None
     * keeps the unfiltered cached side (and its cross-round shuffle-stage
-    * reuse). Returns the pruned (bucket, v, adj) DataFrame; callers
-    * re-type it per kernel. */
+    * reuse). Returns the pruned (bucket, v, adj) DataFrame. */
   private def prunedAdjRound(
       adjDf: DataFrame, liveBuckets: => Array[Long],
       engage: Boolean, nBuckets: Int): Option[DataFrame] =
@@ -1335,6 +1155,386 @@ object Walk {
         val nxt = an(j)
         (nxt, cfg.update(state, walkerId, a.v, nxt))
       }
+    }
+  }
+
+  // ------------------------------------------------ chained walk driver
+  // Local chaining lives in the engine, the apps are thin kernels over it
+  // (reference include/walk.hpp:1056-1063). One driver runs every chained
+  // family; a family supplies its walker tuple, its CSR rows, its step
+  // kernel and its footprint columns.
+
+  /** One walk family of the chained driver. `W` is the walker tuple
+    * (walkerId, step, curV, state...), `A` the per-vertex CSR row it
+    * steps on. Serializable: the cogroup kernel ships it to the tasks. */
+  private[graft] abstract class ChainedFamily[W, A <: graft.model.CsrRow]
+      extends Serializable {
+    /** Log label. */
+    def label: String
+    /** Durable-run manifest, without the starts fingerprint. */
+    def manifest(maxSteps: Int): String
+    def walkerEncoder: Encoder[W]
+    def rowEncoder: Encoder[A]
+    /** Round columns after (walkerId, step, vertex): the walker state. */
+    def stateCols: Seq[String]
+    /** Footprint columns after (walkerId, step, vertex). */
+    def footprintCols: Seq[String] = Seq.empty
+    /** The bucketed CSR, and whether it is run-local (released after the
+      * call) rather than session-cached. */
+    def csr(edges: DataFrame, rangeSize: Long): (GraphOps.BucketedCsr, Boolean)
+    /** Step-0 walkers from a (walkerId, curV) starts table. */
+    def start(starts: DataFrame): Dataset[W]
+    def stepOf(w: W): Int
+    def vertexOf(w: W): Long
+    /** One step from `a`, the CSR row of w's vertex: the walker after
+      * the step, or None when the kernel terminates it. */
+    def step(a: A, w: W): Option[W]
+    /** A footprint row of `w` (state a footprint need not carry dropped). */
+    def footprint(w: W): W = w
+    /** A bucket-crossing row of `w`. */
+    def crosser(w: W): W = w
+
+    // Crossers shipped without part of their state (node2vec's hub
+    // prevNbrs) are re-armed before they step again; the defaults are
+    // no-ops for families whose crossers carry their whole state.
+    /** Predicate, over round columns, of crossers needing a re-arm. */
+    def capped: Option[Column] = None
+    /** Re-arm the frontier's `nCapped` capped crossers before the cogroup. */
+    def rearm(frontier: Dataset[W], nCapped: Long, adj: DataFrame, rangeSize: Long,
+        nBuckets: Int): Dataset[W] = frontier
+    /** Vertices the driver tail must hold to advance `w`. */
+    def tailNeeds(w: W): Seq[Long] = Seq(vertexOf(w))
+    /** Re-arm `w` in the driver tail. */
+    def tailRearm(w: W, look: Long => TailAdj[A]): TailAdj[W] = TailHave(w)
+  }
+
+  /** A chained walk's footprints, and the tally of its driver tail if
+    * one ran. */
+  private[graft] final case class ChainedWalk(footprints: DataFrame, tail: Option[TailTally])
+
+  /** Chain one walker: step it while its step < maxSteps and its vertex
+    * is `inRange`, emitting each footprint. Returns None when it
+    * terminated (dangling vertex or kernel stop), else the walker where
+    * it stopped — below maxSteps, that is a vertex out of range (the
+    * cogroup's bucket) or not fetched yet (the driver tail). The cogroup
+    * kernel and the driver tail both step through here. */
+  private def chainSteps[W, A <: graft.model.CsrRow](
+      fam: ChainedFamily[W, A], maxSteps: Int, w0: W,
+      look: Long => TailAdj[A], inRange: Long => Boolean)(emit: W => Unit): Option[W] = {
+    var w = w0
+    while (fam.stepOf(w) < maxSteps && inRange(fam.vertexOf(w))) {
+      look(fam.vertexOf(w)) match {
+        case TailHave(a) => fam.step(a, w) match {
+          case Some(next) => w = next; emit(fam.footprint(next))
+          case None => return None
+        }
+        case TailDangling => return None
+        case TailUnfetched => return Some(w)
+      }
+    }
+    Some(w)
+  }
+
+  /** The chained walk driver (reference local chaining, SURVEY.md §4.2):
+    * the adjacency is split into contiguous vertex-id ranges; a cogroup
+    * brings each range's walkers and CSR rows into one task, where each
+    * walker advances *many* steps in memory until it leaves the range,
+    * dies, or hits maxSteps. Only range-crossers re-shuffle. Once the
+    * crosser frontier is at most `tailThreshold` walkers, the driver
+    * tail finishes the walk ([[chainedDriverTail]]).
+    *
+    * Round shape (r4, VERDICT r3 #1): the full kernel output
+    * (footprints + `moved` crossers) is cached, and ONLY the small
+    * crosser frontier gets real-stats truncation — its count is the
+    * round's single heavy action and computes the cogroup into the cache
+    * as a side effect; [[sealChained]] copies the footprints out once.
+    * Durable runs swap the cache for the round's Parquet write
+    * ([[DurableChainedRun]]) and the same truncation rides the read-back.
+    *
+    * `probeRowCap` bounds the driver tail's whole-CSR probe. */
+  private[graft] def runChained[W, A <: graft.model.CsrRow](
+      fam: ChainedFamily[W, A],
+      edges: DataFrame,
+      starts: DataFrame,
+      maxSteps: Int,
+      buckets: Int,
+      tailThreshold: Long,
+      store: Option[graft.engine.Iterate.CheckpointStore],
+      runName: String,
+      probeRowCap: Int = TailProbeRowCap): ChainedWalk = {
+    val spark = edges.sparkSession
+    implicit val walkerEnc: Encoder[W] = fam.walkerEncoder
+    implicit val rowEnc: Encoder[A] = fam.rowEncoder
+    implicit val keyedEnc: Encoder[(Long, A)] = Encoders.tuple(Encoders.scalaLong, rowEnc)
+    val bucketEnc = Encoders.scalaLong
+    val nBuckets =
+      if (buckets > 0) buckets else math.max(spark.sparkContext.defaultParallelism * 2, 4)
+    val maxV = edges.agg(greatest(max("src"), max("dst"))).head().getLong(0)
+    val rangeSize = math.max(1L, maxV / nBuckets + 1)
+    val (adj, runLocal) = fam.csr(edges, rangeSize)
+    val adjB = bucketKeyed[A](adj.df)
+
+    val roundCols = Seq("walkerId", "step", "vertex") ++ fam.stateCols
+    val fpCols = (Seq("walkerId", "step", "vertex") ++ fam.footprintCols).map(col)
+    val run = new DurableChainedRun(spark, store, runName,
+      s"${fam.manifest(maxSteps)} startsFp=${startsFingerprint(starts)}")
+    val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var outer = 0
+    // capped crossers in the CURRENT frontier — observed on the previous
+    // round's truncation, so gating the re-arm costs zero extra jobs
+    var capped = 0L
+    var tally: Option[TailTally] = None
+    var frontier: Dataset[W] = run.resume() match {
+      case Some((rounds, hi)) =>
+        rounds.zipWithIndex.foreach { case (df, r) =>
+          history += (if (r == 0) df else df.filter(!col("moved"))).select(fpCols: _*)
+        }
+        outer = hi
+        val moved = rounds.last.filter(col("moved")).select(roundCols.map(col): _*)
+        // the capped count's observation died with the killed run
+        capped = fam.capped.fold(0L)(c => moved.filter(c).count())
+        moved.as[W]
+      case None =>
+        val f0 = fam.start(starts).localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
+        val round0 = f0.toDF(roundCols: _*)
+        history += round0.select(fpCols: _*)
+        if (run.durable) run.commitRound(0, round0.withColumn("moved", lit(true)), roundCaches)
+        f0
+    }
+    var active = frontier.count()
+    try {
+      while (active > 0 && outer <= maxSteps) {
+        if (active <= tailThreshold) {
+          val (foot, t) = chainedDriverTail(frontier.collect(), fam, adj, maxSteps, probeRowCap)
+          tally = Some(t)
+          val footDf = spark.createDataset(foot).toDF(roundCols: _*)
+          history += (if (run.durable)
+            run.commitRound(outer + 1, footDf.withColumn("moved", lit(false)), roundCaches)
+          else footDf).select(fpCols: _*)
+          active = 0
+        } else {
+          val stepInput =
+            if (capped == 0L) frontier
+            else fam.rearm(frontier, capped, adj.df, rangeSize, nBuckets)
+          val grouped = stepInput.groupByKey(w => fam.vertexOf(w) / rangeSize)(bucketEnc)
+          // live-bucket CSR prune — see prunedAdjRound
+          val adjRound = prunedAdjRound(adj.df,
+              frontier.map(w => fam.vertexOf(w) / rangeSize)(bucketEnc).distinct().collect(),
+              engage = outer >= 1 || active < BucketPruneThreshold, nBuckets)
+            .map(bucketKeyed[A](_)).getOrElse(adjB)
+          // moved = false rows are footprints of chained steps; moved =
+          // true rows are walkers parked at a vertex OUTSIDE the bucket
+          val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
+            val rows = new scala.collection.mutable.HashMap[Long, A]
+            adjIt.foreach { case (_, a) => rows.update(a.v, a) }
+            val look: Long => TailAdj[A] = v =>
+              rows.get(v).fold[TailAdj[A]](TailDangling)(TailHave(_))
+            ws.flatMap { w0 =>
+              val outRows = scala.collection.mutable.ArrayBuffer[(W, Boolean)]()
+              chainSteps(fam, maxSteps, w0, look, _ / rangeSize == bucket)(
+                  w => outRows += ((w, false)))
+                .filter(fam.stepOf(_) < maxSteps)
+                .foreach(w => outRows += ((fam.crosser(w), true)))
+              outRows
+            }
+          }(Encoders.tuple(walkerEnc, Encoders.scalaBoolean))
+            .select(col("_1.*"), col("_2")).toDF(roundCols :+ "moved": _*)
+          val outP = run.commitRound(outer + 1, out, roundCaches)
+          history += outP.filter(!col("moved")).select(fpCols: _*)
+          // REAL stats on the frontier are mandatory when a re-arm join
+          // feeds frontier-derived stats into the next round's plan
+          val crossers = outP.filter(col("moved")).select(roundCols.map(col): _*)
+          val obs = org.apache.spark.sql.Observation()
+          val (f2, n) = truncateRealCounted(fam.capped
+            .fold(crossers)(c => crossers.observe(obs, count(when(c, lit(1))).as("capped")))
+            .as[W])
+          frontier = f2
+          if (fam.capped.nonEmpty) capped = obs.get("capped").asInstanceOf[Long]
+          outer += 1
+          active = n
+          System.err.println(s"[graft:${fam.label}] outer=$outer active=$active" +
+            (if (fam.capped.nonEmpty) s" capped=$capped" else ""))
+        }
+      }
+      ChainedWalk(sealChained(history.toSeq, roundCaches.toSeq), tally)
+    } catch {
+      // a failed round (a user lambda throwing, an executor loss) must not
+      // leave the per-round caches pinned for the session (ADVICE r4)
+      case e: Throwable =>
+        roundCaches.foreach(_.unpersist(false))
+        throw e
+    } finally {
+      // run-local CSR: always released, also when a round throws
+      if (runLocal) adj.df.unpersist(false)
+    }
+  }
+
+  /** First-order chained family: keep-draw then alias draw. */
+  private[graft] final class FirstOrderChain(keepProb: Double, seed: Long)
+      extends ChainedFamily[(Long, Int, Long), graft.model.AdjRow] {
+    def label = "chain"
+    def manifest(maxSteps: Int) =
+      s"firstOrderChained seed=$seed keep=$keepProb maxSteps=$maxSteps"
+    def walkerEncoder = Encoders.product[(Long, Int, Long)]
+    def rowEncoder = Encoders.product[graft.model.AdjRow]
+    def stateCols = Seq.empty
+    def csr(edges: DataFrame, rangeSize: Long) =
+      (GraphOps.bucketedCsrCached(edges, rangeSize), false)
+    def start(starts: DataFrame) =
+      starts.select(col("walkerId"), lit(0).as("step"), col("curV")).as(walkerEncoder)
+    def stepOf(w: (Long, Int, Long)) = w._2
+    def vertexOf(w: (Long, Int, Long)) = w._3
+    def step(a: graft.model.AdjRow, w: (Long, Int, Long)) = {
+      val nxt = firstOrderStepKernel(a, w._1, w._2, keepProb, seed)
+      if (nxt < 0) None else Some((w._1, w._2 + 1, nxt))
+    }
+  }
+
+  /** Node2vec chained family: the walker carries (prevV, prevNbrs), -1
+    * and empty before its first step. Footprints carry no arrays; a
+    * crosser ships prevNbrs only up to `crosserCap` entries — above it
+    * the array is left empty and re-armed where the walker steps next:
+    * by one pruned lookup join before the cogroup, or from the tail's
+    * fetch map. */
+  private[graft] final class Node2vecChain(p: Double, q: Double, seed: Long, crosserCap: Int)
+      extends ChainedFamily[(Long, Int, Long, Long, Array[Long]), graft.model.AdjRow] {
+    private type N2v = (Long, Int, Long, Long, Array[Long])
+    def label = "n2vchain"
+    def manifest(maxSteps: Int) = s"node2vecChained seed=$seed p=$p q=$q maxSteps=$maxSteps"
+    def walkerEncoder = Encoders.product[N2v]
+    def rowEncoder = Encoders.product[graft.model.AdjRow]
+    def stateCols = Seq("prevV", "prevNbrs")
+    def csr(edges: DataFrame, rangeSize: Long) =
+      (GraphOps.bucketedCsrCached(edges, rangeSize), false)
+    def start(starts: DataFrame) =
+      starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
+        lit(-1L).as("prevV"), lit(Array.empty[Long]).as("prevNbrs")).as(walkerEncoder)
+    def stepOf(w: N2v) = w._2
+    def vertexOf(w: N2v) = w._3
+    def step(a: graft.model.AdjRow, w: N2v) =
+      Some((w._1, w._2 + 1, node2vecStepKernel(a, w._1, w._2, w._4, w._5, p, q, seed),
+        w._3, a.nbrs))
+    override def footprint(w: N2v) = (w._1, w._2, w._3, -1L, Array.empty[Long])
+    override def crosser(w: N2v) =
+      if (w._5.length > crosserCap) w.copy(_5 = Array.empty[Long]) else w
+
+    private def isCapped(w: N2v) = w._4 >= 0L && w._5.isEmpty
+    override def capped = Some(col("prevV") >= 0 && size(col("prevNbrs")) === 0)
+    override def tailNeeds(w: N2v) = if (isCapped(w)) Seq(w._3, w._4) else Seq(w._3)
+    // a capped crosser's prev vertex MUST be in the CSR (the walker
+    // stepped out of it), so TailDangling cannot occur here
+    override def tailRearm(w: N2v, look: Long => TailAdj[graft.model.AdjRow]): TailAdj[N2v] =
+      if (!isCapped(w)) TailHave(w)
+      else look(w._4) match {
+        case TailHave(a) => TailHave(w.copy(_5 = a.nbrs))
+        case TailUnfetched => TailUnfetched
+        case TailDangling => TailDangling
+      }
+
+    /** One broadcast-frontier lookup join against the persisted CSR
+      * re-attaches the capped prevNbrs — the hub arrays ride straight
+      * into the cogroup exchange and never hit the per-round checkpoint.
+      * The CSR side is pruned to the needed prev VERTICES (a literal
+      * IN-set off the checkpointed frontier — one collect serves the
+      * vertex set, its buckets, and the log; batch min/max stats on the
+      * sorted top-level v cut below bucket granularity). r3 scanned the
+      * FULL cached adjacency per outer round to re-arm a handful of hub
+      * crossers. The reference ships state in O(crossers) messages only
+      * (include/walk.hpp:273-363). */
+    override def rearm(frontier: Dataset[N2v], nCapped: Long, adj: DataFrame,
+        rangeSize: Long, nBuckets: Int): Dataset[N2v] = {
+      val spark = frontier.sparkSession
+      import spark.implicits._
+      val needs = frontier.filter(w => isCapped(w))
+      val ready = frontier.filter(w => !isCapped(w))
+      // when the capped set is huge (pathological all-hub frontier) fall
+      // back to bucket granularity — a 100k-literal predicate would cost
+      // more to plan than it prunes
+      val prevVs = needs.map(_._4).distinct().collect().toSeq
+      val needBuckets = prevVs.map(_ / rangeSize).distinct
+      logResolution((needBuckets.length, nBuckets))
+      System.err.println(
+        s"[graft:n2vchain] resolving $nCapped capped crossers from " +
+          s"${prevVs.length} vertices in ${needBuckets.length}/$nBuckets CSR buckets")
+      val csrSide = adj.filter(col("bucket").isin(needBuckets: _*))
+      val csrPruned =
+        if (prevVs.length <= LightModeThreshold) csrSide.filter(col("v").isin(prevVs: _*))
+        else csrSide
+      val resolved = csrPruned
+        .select(col("v").as("pv"), col("adj.nbrs").as("pnbrs"))
+        .join(broadcast(needs.toDF("walkerId", "step", "curV", "prevV", "prevNbrs")
+          .drop("prevNbrs")), col("prevV") === col("pv"))
+        .select(col("walkerId"), col("step"), col("curV"), col("prevV"),
+          col("pnbrs").as("prevNbrs"))
+        .as[N2v]
+      ready.union(resolved)
+    }
+  }
+
+  /** Metapath chained family: the walker carries its schemeId; the
+    * kernel masks the CSR by the scheme's per-step edge-type mask. The
+    * typed CSR is run-local. */
+  private[graft] final class MetapathChain(schemes: Seq[Seq[Seq[Boolean]]], seed: Long)
+      extends ChainedFamily[(Long, Int, Long, Int), graft.model.TypedAdjRow] {
+    private val schemesB = schemes.map(_.map(_.toArray).toArray).toArray
+    def label = "chain-mp"
+    def manifest(maxSteps: Int) =
+      s"metapathChained seed=$seed maxSteps=$maxSteps schemes=${schemeString(schemes)}"
+    def walkerEncoder = Encoders.product[(Long, Int, Long, Int)]
+    def rowEncoder = Encoders.product[graft.model.TypedAdjRow]
+    def stateCols = Seq("schemeId")
+    def csr(edges: DataFrame, rangeSize: Long) = {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      (GraphOps.bucketed(typedRows(edges).as[graft.model.TypedAdjRow], rangeSize), true)
+    }
+    def start(starts: DataFrame) =
+      starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
+          pmod(col("walkerId"), lit(schemes.size)).cast("int").as("schemeId"))
+        .as(walkerEncoder)
+    def stepOf(w: (Long, Int, Long, Int)) = w._2
+    def vertexOf(w: (Long, Int, Long, Int)) = w._3
+    def step(a: graft.model.TypedAdjRow, w: (Long, Int, Long, Int)) = {
+      val nxt = metapathStepKernel(a, w._1, w._2, schemesB(w._4), seed)
+      if (nxt < 0) None else Some((w._1, w._2 + 1, nxt, w._4))
+    }
+  }
+
+  /** Generic-stateful chained family: the walker carries its typed state
+    * S, footprints keep it, and the user's Pe/bias/update lambdas run in
+    * the kernel. The edata CSR is run-local. */
+  private[graft] final class StatefulChain[S](
+      cfg: StatefulConfig[S], seed: Long, portableRng: Boolean, sampleSalt: String,
+      stateEnc: Encoder[S])
+      extends ChainedFamily[(Long, Int, Long, S), graft.model.EdataAdjRow] {
+    private val unbiased = cfg.static == StaticComp.Unbiased
+    private val rnd = statefulRng(seed, portableRng)
+    def label = "chain-gs"
+    def manifest(maxSteps: Int) =
+      s"genericStatefulChained seed=$seed portable=$portableRng salt=$sampleSalt " +
+        s"static=${cfg.static} maxSteps=$maxSteps"
+    lazy val walkerEncoder = Encoders.tuple(
+      Encoders.scalaLong, Encoders.scalaInt, Encoders.scalaLong, stateEnc)
+    def rowEncoder = Encoders.product[graft.model.EdataAdjRow]
+    def stateCols = Seq("state")
+    override def footprintCols = Seq("state")
+    def csr(edges: DataFrame, rangeSize: Long) = {
+      val spark = edges.sparkSession
+      import spark.implicits._
+      (GraphOps.bucketed(edataRows(edges).as[graft.model.EdataAdjRow], rangeSize), true)
+    }
+    def start(starts: DataFrame) = {
+      val init = cfg.init
+      starts.select(col("walkerId"), col("curV"))
+        .as(Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong))
+        .map { case (wid, v) => (wid, 0, v, init(wid, v)) }(walkerEncoder)
+    }
+    def stepOf(w: (Long, Int, Long, S)) = w._2
+    def vertexOf(w: (Long, Int, Long, S)) = w._3
+    def step(a: graft.model.EdataAdjRow, w: (Long, Int, Long, S)) = {
+      val (nxt, st2) = statefulStepKernel(a, w._1, w._2, w._4, cfg, unbiased, rnd, sampleSalt)
+      if (nxt < 0) None else Some((w._1, w._2 + 1, nxt, st2))
     }
   }
 
@@ -1776,6 +1976,9 @@ object Walk {
     * deterministic splitmix64 on (seed, walker, step) — distributionally
     * identical but not bit-identical to the join-based variant.
     *
+    * Runs on the chained driver ([[runChained]]) with
+    * [[FirstOrderChain]]'s kernel.
+    *
     * @param buckets number of vertex ranges; size so one range's CSR fits
     *                a task's memory (at 100 TB: thousands of buckets)
     */
@@ -1788,158 +1991,9 @@ object Walk {
       buckets: Int = 0,
       tailThreshold: Long = LightModeThreshold,
       store: Option[graft.engine.Iterate.CheckpointStore] = None,
-      runName: String = "chain"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val nBuckets =
-      if (buckets > 0) buckets else math.max(spark.sparkContext.defaultParallelism * 2, 4)
-
-    val maxV = edges.agg(greatest(max("src"), max("dst"))).head().getLong(0)
-    val rangeSize = math.max(1L, maxV / nBuckets + 1)
-
-    // persist the bucketed CSR once — the cogroup re-reads it every outer
-    // round, and without the persist each round re-runs the groupBy +
-    // alias-table build (the count also materializes it and gates tail
-    // bucket pruning)
-    val adjDf = GraphOps.bucketedAdjacencyCached(edges, rangeSize)
-    def typed(df: DataFrame) = bucketKeyed[graft.model.AdjRow](df)
-    val adjB = typed(adjDf)
-
-    val run = new DurableChainedRun(spark, store, runName,
-      s"firstOrderChained seed=$seed keep=$keepProb maxSteps=$maxSteps " +
-        s"startsFp=${startsFingerprint(starts)}")
-    val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var outer = 0
-    var frontier: Dataset[(Long, Int, Long)] = run.resume() match {
-      case Some((rounds, hi)) =>
-        rounds.zipWithIndex.foreach { case (df, r) =>
-          history += (if (r == 0) df else df.filter(!col("moved")))
-            .select(col("walkerId"), col("step"), col("vertex"))
-        }
-        outer = hi
-        rounds.last.filter(col("moved"))
-          .select(col("walkerId"), col("step"), col("vertex").as("curV"))
-          .as[(Long, Int, Long)]
-      case None =>
-        val f0 = starts.select(col("walkerId"), lit(0).as("step"), col("curV"))
-          .as[(Long, Int, Long)]
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        history += f0.toDF("walkerId", "step", "curV")
-          .select(col("walkerId"), col("step"), col("curV").as("vertex"))
-        if (run.durable)
-          run.commitRound(0, f0.toDF("walkerId", "step", "curV")
-            .select(col("walkerId"), col("step"), col("curV").as("vertex"),
-              lit(true).as("moved")), roundCaches)
-        f0
-    }
-    var active = frontier.count()
-    try {
-      while (active > 0 && outer <= maxSteps) {
-        if (active <= tailThreshold) {
-          // driver-local tail: finish the walk with vertex-pruned fetches
-          // instead of paying a full-CSR cogroup exchange per round for a
-          // handful of walkers (see chainedDriverTail)
-          val foot = chainedDriverTail[(Long, Int, Long), graft.model.AdjRow,
-              (Long, Int, Long)](
-            frontier.collect(),
-            neededOf = w => Seq(w._3),
-            fetch = vs => fetchByVertex(adjDf, vs)(_.as[graft.model.AdjRow].collect()),
-            fetchAll = lim =>
-              fetchAllRows(adjDf, lim)(_.as[graft.model.AdjRow].collect()),
-            vOf = _.v,
-            degOf = _.nbrs.length,
-            advance = { (w, look) =>
-              val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
-              var (walkerId, step, cur) = w
-              var parked: Option[(Long, Int, Long)] = None
-              var done = false
-              while (!done && step < maxSteps) {
-                look(cur) match {
-                  case TailUnfetched => parked = Some((walkerId, step, cur)); done = true
-                  case TailDangling => done = true
-                  case TailHave(a) =>
-                    val nxt = firstOrderStepKernel(a, walkerId, step, keepProb, seed)
-                    if (nxt < 0) done = true
-                    else { step += 1; cur = nxt; rows += ((walkerId, step, cur)) }
-                }
-              }
-              (rows.toSeq, parked)
-            },
-            label = "chain")
-          val footDf = spark.createDataset(foot).toDF("walkerId", "step", "vertex")
-          history += (if (run.durable)
-            run.commitRound(outer + 1, footDf.withColumn("moved", lit(false)),
-                roundCaches)
-              .select(col("walkerId"), col("step"), col("vertex"))
-          else footDf)
-          active = 0
-        } else {
-          val grouped = frontier.groupByKey(_._3 / rangeSize)
-          // live-bucket CSR prune — see prunedAdjRound
-          val adjRound = prunedAdjRound(adjDf, frontier.map(_._3 / rangeSize)
-                .distinct().collect(),
-              engage = outer >= 1 || active < BucketPruneThreshold, nBuckets)
-            .map(typed).getOrElse(adjB)
-          // output rows: (walkerId, step, vertex, moved) — moved=false rows
-          // are footprints of chained steps; moved=true rows are walkers
-          // parked at a vertex OUTSIDE this bucket (next frontier)
-          val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
-            val csr = new scala.collection.mutable.HashMap[Long, graft.model.AdjRow]
-            adjIt.foreach { case (_, a) => csr.update(a.v, a) }
-            ws.flatMap { case (walkerId, step0, v0) =>
-              val outRows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Boolean)]()
-              var step = step0
-              var cur = v0
-              var done = false
-              while (!done && step < maxSteps && cur / rangeSize == bucket) {
-                csr.get(cur) match {
-                  case None => done = true // dangling: terminate
-                  case Some(a) =>
-                    val nxt = firstOrderStepKernel(a, walkerId, step, keepProb, seed)
-                    if (nxt < 0) done = true
-                    else {
-                      step += 1
-                      cur = nxt
-                      outRows += ((walkerId, step, cur, false)) // footprint
-                    }
-                }
-              }
-              if (!done && step < maxSteps && cur / rangeSize != bucket)
-                outRows += ((walkerId, step, cur, true)) // crossed: re-shuffle
-              outRows
-            }
-          }.toDF("walkerId", "step", "vertex", "moved")
-          // r4 round shape (VERDICT r3 #1): cache the full kernel output,
-          // real-stats-truncate ONLY the (small) crosser frontier — its count
-          // is the round's single heavy action and computes the cogroup into
-          // the cache as a side effect. Footprints stay cached, consumed
-          // lazily by sealChained — no per-round full-output copy or count.
-          // (Durable runs swap the cache for the round's Parquet write —
-          // commitRound — and the same truncation protocol rides the
-          // read-back scan.)
-          val outP = run.commitRound(outer + 1, out, roundCaches)
-          history += outP.filter(!col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex"))
-          val (f2, n) = truncateRealCounted(outP.filter(col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex").as("curV"))
-            .as[(Long, Int, Long)])
-          frontier = f2
-          outer += 1
-          active = n
-          System.err.println(s"[graft:chain] outer=$outer active=$active")
-        }
-      }
-      sealChained(history.toSeq, roundCaches.toSeq)
-    } catch {
-      // a failed round (e.g. a user lambda throwing in a sibling engine's
-      // pattern, or an executor loss) must not leave the per-round caches
-      // pinned for the session (ADVICE r4)
-      case e: Throwable =>
-        roundCaches.foreach(_.unpersist(false))
-        throw e
-    }
-  }
+      runName: String = "chain"): DataFrame =
+    runChained(new FirstOrderChain(keepProb, seed),
+      edges, starts, maxSteps, buckets, tailThreshold, store, runName).footprints
 
   /** Second-order node2vec walk with LOCAL CHAINING — the reference's
     * biggest node2vec lever (include/walk.hpp:1226-1257; paper Table 5a):
@@ -1952,6 +2006,8 @@ object Walk {
     * rides ONLY on crossing rows instead of every per-step join row).
     * Randomness: deterministic splitmix64 on (seed, walker, step) —
     * distributionally identical to [[node2vec]], not bit-identical.
+    * Runs on the chained driver ([[runChained]]) with
+    * [[Node2vecChain]]'s kernel and capped-crosser hooks.
     */
   def node2vecChained(
       edges: DataFrame,
@@ -1964,236 +2020,9 @@ object Walk {
       crosserCap: Int = CrosserNbrsCap,
       tailThreshold: Long = LightModeThreshold,
       store: Option[graft.engine.Iterate.CheckpointStore] = None,
-      runName: String = "n2vchain"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val nBuckets =
-      if (buckets > 0) buckets else math.max(spark.sparkContext.defaultParallelism * 2, 4)
-    val maxV = edges.agg(greatest(max("src"), max("dst"))).head().getLong(0)
-    val rangeSize = math.max(1L, maxV / nBuckets + 1)
-
-    // session-cached bucketed CSR (see firstOrderChained)
-    val adjDf = GraphOps.bucketedAdjacencyCached(edges, rangeSize)
-    def typed(df: DataFrame) = bucketKeyed[graft.model.AdjRow](df)
-    val adjB = typed(adjDf)
-
-    val run = new DurableChainedRun(spark, store, runName,
-      s"node2vecChained seed=$seed p=$p q=$q maxSteps=$maxSteps " +
-        s"startsFp=${startsFingerprint(starts)}")
-    val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var outer = 0
-    // number of crossers in the CURRENT frontier that were shipped
-    // without their prevNbrs (hub cap) — carried out of the previous
-    // round's count action as an Observation metric, so gating the
-    // resolution join costs zero extra jobs (r3 ran a needs.count()
-    // barrier every round even when no hub crosser existed)
-    var cappedPrev = 0L
-    // frontier: (walkerId, step, curV, prevV (-1 = first step), prevNbrs)
-    var frontier: Dataset[(Long, Int, Long, Long, Array[Long])] = run.resume() match {
-      case Some((rounds, hi)) =>
-        rounds.zipWithIndex.foreach { case (df, r) =>
-          history += (if (r == 0) df else df.filter(!col("moved")))
-            .select(col("walkerId"), col("step"), col("vertex"))
-        }
-        outer = hi
-        val f = rounds.last.filter(col("moved"))
-          .select(col("walkerId"), col("step"), col("vertex").as("curV"),
-            col("prevV"), col("prevNbrs"))
-          .as[(Long, Int, Long, Long, Array[Long])]
-        // the resolution gate's Observation count died with the killed
-        // run — recompute it off the reloaded frontier (resume-time only)
-        cappedPrev = f.filter(w => w._4 >= 0L && w._5.isEmpty).count()
-        f
-      case None =>
-        val f0 = starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
-            lit(-1L).as("prevV"), lit(Array.empty[Long]).as("prevNbrs"))
-          .as[(Long, Int, Long, Long, Array[Long])]
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        history += f0.toDF("walkerId", "step", "curV", "prevV", "prevNbrs")
-          .select(col("walkerId"), col("step"), col("curV").as("vertex"))
-        if (run.durable)
-          run.commitRound(0, f0.toDF("walkerId", "step", "curV", "prevV", "prevNbrs")
-            .select(col("walkerId"), col("step"), col("curV").as("vertex"),
-              col("prevV"), col("prevNbrs"), lit(true).as("moved")), roundCaches)
-        f0
-    }
-    var active = frontier.count()
-    try {
-      while (active > 0 && outer <= maxSteps) {
-        if (active <= tailThreshold) {
-          // driver-local tail (see chainedDriverTail): capped crossers'
-          // prevNbrs resolve against the same local fetch map — prevV's
-          // adjacency joins the IN-set, no resolution join at all
-          val foot = chainedDriverTail[(Long, Int, Long, Long, Array[Long]),
-              graft.model.AdjRow, (Long, Int, Long)](
-            frontier.collect(),
-            neededOf = w =>
-              if (w._4 >= 0L && w._5.isEmpty) Seq(w._3, w._4) else Seq(w._3),
-            fetch = vs => fetchByVertex(adjDf, vs)(_.as[graft.model.AdjRow].collect()),
-            fetchAll = lim =>
-              fetchAllRows(adjDf, lim)(_.as[graft.model.AdjRow].collect()),
-            vOf = _.v,
-            degOf = _.nbrs.length,
-            advance = { (w, look) =>
-              val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
-              var (walkerId, step, cur, prev, prevNbrs) = w
-              var parked: Option[(Long, Int, Long, Long, Array[Long])] = None
-              var done = false
-              // re-arm a capped crosser first: its prev vertex MUST be in
-              // the CSR (the walker stepped out of it last round)
-              if (prev >= 0L && prevNbrs.isEmpty) look(prev) match {
-                case TailHave(a) => prevNbrs = a.nbrs
-                case TailUnfetched => parked = Some(w); done = true
-                case TailDangling => done = true // unreachable: prev had out-edges
-              }
-              while (!done && step < maxSteps) {
-                look(cur) match {
-                  case TailUnfetched =>
-                    parked = Some((walkerId, step, cur, prev, prevNbrs)); done = true
-                  case TailDangling => done = true
-                  case TailHave(a) =>
-                    val nxt = node2vecStepKernel(a, walkerId, step, prev, prevNbrs,
-                      p, q, seed)
-                    prev = cur
-                    prevNbrs = a.nbrs
-                    step += 1
-                    cur = nxt
-                    rows += ((walkerId, step, cur))
-                }
-              }
-              (rows.toSeq, parked)
-            },
-            label = "n2vchain")
-          val footDf = spark.createDataset(foot).toDF("walkerId", "step", "vertex")
-          history += (if (run.durable)
-            run.commitRound(outer + 1, footDf
-                .withColumn("prevV", lit(-1L))
-                .withColumn("prevNbrs", lit(Array.empty[Long]))
-                .withColumn("moved", lit(false)), roundCaches)
-              .select(col("walkerId"), col("step"), col("vertex"))
-          else footDf)
-          active = 0
-        } else {
-          // crossers whose previous vertex had degree > crosserCap were
-          // shipped WITHOUT their prevNbrs array (empty + prevV >= 0): re-
-          // attach it here with one broadcast-frontier lookup join against
-          // the persisted CSR — the hub arrays ride straight into the
-          // cogroup exchange and never hit the per-round checkpoint. The
-          // CSR side is pruned to the needed prev VERTICES (a literal
-          // IN-set off the checkpointed frontier — one collect serves the
-          // vertex set, its buckets, and the log; batch min/max stats on
-          // the sorted top-level v cut below bucket granularity). r3
-          // scanned the FULL cached adjacency per outer round to re-arm a
-          // handful of hub crossers — a fixed cost that erases the
-          // chaining win at scale. The reference ships state in
-          // O(crossers) messages only (include/walk.hpp:273-363).
-          val stepInput =
-            if (cappedPrev == 0L) frontier
-            else {
-              val needs = frontier.filter(w => w._4 >= 0L && w._5.isEmpty)
-              val ready = frontier.filter(w => w._4 < 0L || w._5.nonEmpty)
-              // one collect off the small checkpointed frontier serves the
-              // prev-vertex IN-set, its bucket IN-set, and the log; when
-              // the capped set is huge (pathological all-hub frontier)
-              // fall back to bucket granularity — a 100k-literal predicate
-              // would cost more to plan than it prunes
-              val prevVs = needs.map(_._4).distinct().collect().toSeq
-              val needBuckets = prevVs.map(_ / rangeSize).distinct
-              logResolution((needBuckets.length, nBuckets))
-              System.err.println(
-                s"[graft:n2vchain] resolving $cappedPrev capped crossers from " +
-                  s"${prevVs.length} vertices in ${needBuckets.length}/$nBuckets CSR buckets")
-              val csrSide = adjDf.filter(col("bucket").isin(needBuckets: _*))
-              val csrPruned =
-                if (prevVs.length <= LightModeThreshold)
-                  // row-level prune on the sorted top-level v (evaluated as
-                  // an InSet row filter; the bucket IN-set above already
-                  // bounds the batches decompressed)
-                  csrSide.filter(col("v").isin(prevVs: _*))
-                else csrSide
-              val resolved = csrPruned
-                .select(col("v").as("pv"), col("adj.nbrs").as("pnbrs"))
-                .join(broadcast(needs.toDF("walkerId", "step", "curV", "prevV", "prevNbrs")
-                  .drop("prevNbrs")), col("prevV") === col("pv"))
-                .select(col("walkerId"), col("step"), col("curV"), col("prevV"),
-                  col("pnbrs").as("prevNbrs"))
-                .as[(Long, Int, Long, Long, Array[Long])]
-              ready.union(resolved)
-            }
-          val grouped = stepInput.groupByKey(_._3 / rangeSize)
-          // live-bucket CSR prune — see prunedAdjRound
-          val adjRound = prunedAdjRound(adjDf, frontier.map(_._3 / rangeSize)
-                .distinct().collect(),
-              engage = outer >= 1 || active < BucketPruneThreshold, nBuckets)
-            .map(typed).getOrElse(adjB)
-          val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
-            val csr = new scala.collection.mutable.HashMap[Long, graft.model.AdjRow]
-            adjIt.foreach { case (_, a) => csr.update(a.v, a) }
-            ws.flatMap { case (walkerId, step0, v0, pv0, pn0) =>
-              val rows =
-                scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Long, Array[Long], Boolean)]()
-              var step = step0
-              var cur = v0
-              var prev = pv0
-              var prevNbrs = pn0
-              var done = false
-              while (!done && step < maxSteps && cur / rangeSize == bucket) {
-                csr.get(cur) match {
-                  case None => done = true // dangling: terminate
-                  case Some(a) =>
-                    val nxt = node2vecStepKernel(a, walkerId, step, prev, prevNbrs,
-                      p, q, seed)
-                    prev = cur
-                    prevNbrs = a.nbrs
-                    step += 1
-                    cur = nxt
-                    // footprints carry no arrays — only crossers ship prevNbrs
-                    rows += ((walkerId, step, cur, -1L, Array.empty[Long], false))
-                }
-              }
-              if (!done && step < maxSteps && cur / rangeSize != bucket) {
-                // bounded crosser state: hub-degree prevNbrs are NOT shipped
-                // (re-resolved at the start of the next round instead)
-                val ship = if (prevNbrs.length > crosserCap) Array.empty[Long] else prevNbrs
-                rows += ((walkerId, step, cur, prev, ship, true))
-              }
-              rows
-            }
-          }.toDF("walkerId", "step", "vertex", "prevV", "prevNbrs", "moved")
-          // r4 round shape (see firstOrderChained/sealChained): cache the
-          // full output, real-stats-truncate ONLY the crosser frontier.
-          // REAL stats on the frontier are mandatory here: the prevNbrs
-          // resolution join feeds frontier-derived stats into the round's
-          // plan, which would square without the truncation. The capped-
-          // crosser count for the next round's resolution gate rides the
-          // same count action as an Observation metric. (Durable runs
-          // swap the cache for the round's Parquet write — commitRound.)
-          val outP = run.commitRound(outer + 1, out, roundCaches)
-          history += outP.filter(!col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex"))
-          val obs = org.apache.spark.sql.Observation()
-          val (f2, n) = truncateRealCounted(outP.filter(col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex").as("curV"),
-              col("prevV"), col("prevNbrs"))
-            .observe(obs, count(when(col("prevV") >= 0 && size(col("prevNbrs")) === 0,
-              lit(1))).as("capped"))
-            .as[(Long, Int, Long, Long, Array[Long])])
-          frontier = f2
-          cappedPrev = obs.get("capped").asInstanceOf[Long]
-          outer += 1
-          active = n
-          System.err.println(
-            s"[graft:n2vchain] outer=$outer active=$active capped=$cappedPrev")
-        }
-      }
-      sealChained(history.toSeq, roundCaches.toSeq)
-    } catch {
-      case e: Throwable =>
-        roundCaches.foreach(_.unpersist(false))
-        throw e
-    }
-  }
+      runName: String = "n2vchain"): DataFrame =
+    runChained(new Node2vecChain(p, q, seed, crosserCap),
+      edges, starts, maxSteps, buckets, tailThreshold, store, runName).footprints
 
   /** Second-order node2vec walk (exact distribution via joins; SURVEY.md
     * §2.10). First step is first-order; later steps bias by 1/p (return),
@@ -2980,27 +2809,6 @@ object Walk {
       col("curV").as("vertex"))).reduce(_ unionAll _)
   }
 
-  /** Epoched [[genericReject]] — the walk-rate memory bound composed with
-    * the rejection engine (reference include/walk.hpp:140-144; RNG keys
-    * on the absolute walkerId, so epoched == single-run bitwise). */
-  def genericRejectEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      maxSteps: Int,
-      config: TransitionConfig,
-      upper: Double,
-      lower: Double = 0.0,
-      maxTrials: Int = 64,
-      seed: Long = 42L,
-      portableRng: Boolean = false,
-      outliers: Option[OutlierConfig] = None): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      genericReject(edges, startsFor(begin, end), maxSteps, config,
-        upper, lower, maxTrials, seed, portableRng, outliers)
-    }
-
   /** Heterogeneous-edge metapath walk (reference src/apps/metapath.hpp:
     * 70-128 + metascheme.hpp): edges carry an `etype` column; walker w
     * follows scheme (w mod schemes.size), and at step s may only take
@@ -3017,11 +2825,7 @@ object Walk {
       store: Option[graft.engine.Iterate.CheckpointStore] = None,
       runName: String = "meta"): DataFrame = {
     val spark = edges.sparkSession
-    val adj = edges
-      .groupBy(col("src").as("v"))
-      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("etype")))).as("adjl"))
-      .select(col("v"),
-        col("adjl.dst").as("nbrs"), col("adjl.weight").as("wts"), col("adjl.etype").as("etypes"))
+    val adj = typedRows(edges)
       .repartition(col("v"))
       .sortWithinPartitions("v")
       .persist(StorageLevel.MEMORY_AND_DISK_SER)
@@ -3064,8 +2868,7 @@ object Walk {
     // walker under its scheme exactly (randomness keys on walkerId, step)
     val run = new DurableRun(spark, store, runName, maxSteps,
       s"metapath seed=$seed portable=$portableRng " +
-        s"schemes=${schemes.map(_.map(_.map(b => if (b) '1' else '0').mkString)
-          .mkString("+")).mkString(",")} startsFp=${startsFingerprint(starts)}")
+        s"schemes=${schemeString(schemes)} startsFp=${startsFingerprint(starts)}")
     val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
     var (frontier, step) = run.seed(history,
       starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
@@ -3105,7 +2908,8 @@ object Walk {
     * RNG keys on splitmix64(seed, walker, step) like the other chained
     * kernels, so results are deterministic across parallelism and bucket
     * counts. Walkers with zero allowed mass at a step terminate, exactly
-    * as the join-based sampler does. */
+    * as the join-based sampler does. Runs on the chained driver
+    * ([[runChained]]) with [[MetapathChain]]'s kernel. */
   def metapathChained(
       edges: DataFrame,               // (src, dst, weight, etype)
       starts: DataFrame,              // (walkerId, curV)
@@ -3115,298 +2919,28 @@ object Walk {
       buckets: Int = 0,
       tailThreshold: Long = LightModeThreshold,
       store: Option[graft.engine.Iterate.CheckpointStore] = None,
-      runName: String = "chain-mp"): DataFrame = {
-    val spark = edges.sparkSession
-    import spark.implicits._
-    val nBuckets =
-      if (buckets > 0) buckets else math.max(spark.sparkContext.defaultParallelism * 2, 4)
-    val maxV = edges.agg(greatest(max("src"), max("dst"))).head().getLong(0)
-    val rangeSize = math.max(1L, maxV / nBuckets + 1)
-
-    // typed bucketed CSR: sort_array orders by dst like the join-based
-    // metapath's sub-adjacency, so the masked inverse-CDF walks the same
-    // support order; v top-level + sorted for the tail's pruned fetches
-    // (see GraphOps.bucketedAdjacencyCached)
-    val adjDf = edges
-      .groupBy(col("src").as("v"))
-      .agg(sort_array(collect_list(struct(col("dst"), col("weight"), col("etype")))).as("adjl"))
-      .select(col("v"), col("adjl.dst").as("nbrs"), col("adjl.weight").as("wts"),
-        col("adjl.etype").as("etypes"))
-      .as[graft.model.TypedAdjRow]
-      .map(a => (a.v / rangeSize, a.v, a))
-      .toDF("bucket", "v", "adj")
-      .repartition(col("bucket")) // shuffled once at build — see bucketKeyed
-      .sortWithinPartitions("v")
-      .persist(StorageLevel.MEMORY_AND_DISK_SER)
-    adjDf.count()
-    def typed(df: DataFrame) = bucketKeyed[graft.model.TypedAdjRow](df)
-    val adjB = typed(adjDf)
-
-    val schemesB = schemes.map(_.map(_.toArray).toArray).toArray
-    val nSchemes = schemes.size
-
-    val run = new DurableChainedRun(spark, store, runName,
-      s"metapathChained seed=$seed maxSteps=$maxSteps " +
-        s"schemes=${schemes.map(_.map(_.map(b => if (b) '1' else '0').mkString)
-          .mkString("+")).mkString(",")} startsFp=${startsFingerprint(starts)}")
-    val history = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val roundCaches = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    var outer = 0
-    // frontier: (walkerId, step, curV, schemeId)
-    var frontier: Dataset[(Long, Int, Long, Int)] = run.resume() match {
-      case Some((rounds, hi)) =>
-        rounds.zipWithIndex.foreach { case (df, r) =>
-          history += (if (r == 0) df else df.filter(!col("moved")))
-            .select(col("walkerId"), col("step"), col("vertex"))
-        }
-        outer = hi
-        rounds.last.filter(col("moved"))
-          .select(col("walkerId"), col("step"), col("vertex").as("curV"),
-            col("schemeId"))
-          .as[(Long, Int, Long, Int)]
-      case None =>
-        val f0 = starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
-            pmod(col("walkerId"), lit(nSchemes)).cast("int").as("schemeId"))
-          .as[(Long, Int, Long, Int)]
-          .localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER)
-        history += f0.toDF("walkerId", "step", "curV", "schemeId")
-          .select(col("walkerId"), col("step"), col("curV").as("vertex"))
-        if (run.durable)
-          run.commitRound(0, f0.toDF("walkerId", "step", "curV", "schemeId")
-            .select(col("walkerId"), col("step"), col("curV").as("vertex"),
-              col("schemeId"), lit(true).as("moved")), roundCaches)
-        f0
-    }
-    var active = frontier.count()
-    try {
-      while (active > 0 && outer <= maxSteps) {
-        if (active <= tailThreshold) {
-          // driver-local tail — see chainedDriverTail
-          val foot = chainedDriverTail[(Long, Int, Long, Int),
-              graft.model.TypedAdjRow, (Long, Int, Long)](
-            frontier.collect(),
-            neededOf = w => Seq(w._3),
-            fetch = vs => fetchByVertex(adjDf, vs)(_.as[graft.model.TypedAdjRow].collect()),
-            fetchAll = lim =>
-              fetchAllRows(adjDf, lim)(_.as[graft.model.TypedAdjRow].collect()),
-            vOf = _.v,
-            degOf = _.nbrs.length,
-            advance = { (w, look) =>
-              val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long)]()
-              var (walkerId, step, cur, schemeId) = w
-              val scheme = schemesB(schemeId)
-              var parked: Option[(Long, Int, Long, Int)] = None
-              var done = false
-              while (!done && step < maxSteps) {
-                look(cur) match {
-                  case TailUnfetched =>
-                    parked = Some((walkerId, step, cur, schemeId)); done = true
-                  case TailDangling => done = true
-                  case TailHave(a) =>
-                    val nxt = metapathStepKernel(a, walkerId, step, scheme, seed)
-                    if (nxt < 0) done = true
-                    else { step += 1; cur = nxt; rows += ((walkerId, step, cur)) }
-                }
-              }
-              (rows.toSeq, parked)
-            },
-            label = "chain-mp")
-          val footDf = spark.createDataset(foot).toDF("walkerId", "step", "vertex")
-          history += (if (run.durable)
-            run.commitRound(outer + 1, footDf
-                .withColumn("schemeId", lit(0))
-                .withColumn("moved", lit(false)), roundCaches)
-              .select(col("walkerId"), col("step"), col("vertex"))
-          else footDf)
-          active = 0
-        } else {
-          val grouped = frontier.groupByKey(_._3 / rangeSize)
-          // live-bucket CSR prune — see prunedAdjRound
-          val adjRound = prunedAdjRound(adjDf, frontier.map(_._3 / rangeSize)
-                .distinct().collect(),
-              engage = outer >= 1 || active < BucketPruneThreshold, nBuckets)
-            .map(typed).getOrElse(adjB)
-          val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
-            val csr = new scala.collection.mutable.HashMap[Long, graft.model.TypedAdjRow]
-            adjIt.foreach { case (_, a) => csr.update(a.v, a) }
-            ws.flatMap { case (walkerId, step0, v0, schemeId) =>
-              val rows = scala.collection.mutable.ArrayBuffer[(Long, Int, Long, Int, Boolean)]()
-              val scheme = schemesB(schemeId)
-              var step = step0
-              var cur = v0
-              var done = false
-              while (!done && step < maxSteps && cur / rangeSize == bucket) {
-                csr.get(cur) match {
-                  case None => done = true // dangling: terminate
-                  case Some(a) =>
-                    val nxt = metapathStepKernel(a, walkerId, step, scheme, seed)
-                    if (nxt < 0) done = true // no allowed mass: terminate
-                    else {
-                      step += 1
-                      cur = nxt
-                      rows += ((walkerId, step, cur, schemeId, false)) // footprint
-                    }
-                }
-              }
-              if (!done && step < maxSteps && cur / rangeSize != bucket)
-                rows += ((walkerId, step, cur, schemeId, true)) // crossed: re-shuffle
-              rows
-            }
-          }.toDF("walkerId", "step", "vertex", "schemeId", "moved")
-          // r4 round shape — see firstOrderChained/sealChained (durable
-          // runs commit the round's Parquet instead of the cache)
-          val outP = run.commitRound(outer + 1, out, roundCaches)
-          history += outP.filter(!col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex"))
-          val (f2, n) = truncateRealCounted(outP.filter(col("moved"))
-            .select(col("walkerId"), col("step"), col("vertex").as("curV"), col("schemeId"))
-            .as[(Long, Int, Long, Int)])
-          frontier = f2
-          outer += 1
-          active = n
-          System.err.println(s"[graft:chain-mp] outer=$outer active=$active")
-        }
-      }
-      sealChained(history.toSeq, roundCaches.toSeq)
-    } catch {
-      case e: Throwable =>
-        roundCaches.foreach(_.unpersist(false))
-        throw e
-    } finally {
-      // run-local CSR: always released, also when a round throws
-      // (ADVICE r4; sealChained on the success path only drops the
-      // per-round caches)
-      adjDf.unpersist(false)
-    }
-  }
+      runName: String = "chain-mp"): DataFrame =
+    runChained(new MetapathChain(schemes, seed),
+      edges, starts, maxSteps, buckets, tailThreshold, store, runName).footprints
 
   /** Epoched walk (reference "walk rate", include/walk.hpp:140-144,
-    * 703-844): split the walkers into `epochs` contiguous ranges and run
-    * each range's walk to completion before the next starts — bounds the
-    * in-flight frontier + footprint memory. Same semantics/randomness as
-    * one big run (the RNG keys on absolute walkerId). */
-  def firstOrderEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,  // (walkerBegin, walkerEnd) => (walkerId, curV)
-      numWalkers: Long,
-      epochs: Int,
-      maxSteps: Int,
-      keepProb: Double = 1.0,
-      seed: Long = 42L): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      firstOrder(edges, startsFor(begin, end), maxSteps, keepProb, seed)
-    }
-
-  /** Contiguous walker-id ranges for the epoched variants. The RNG (and
-    * metapath's scheme assignment) keys on the ABSOLUTE walkerId, so the
-    * union of the per-epoch walks is bitwise-identical to one big run —
-    * the memory bound is free of semantic drift (GraphOpsSpec /
-    * WalkApiSpec equality tests). */
-  private def epochRanges(numWalkers: Long, epochs: Int): Seq[(Long, Long)] = {
+    * 703-844) for any engine: split the walker ids [0, numWalkers) into
+    * `epochs` contiguous ranges, run `walk((begin, end))` for each range
+    * to completion before the next starts, and union the footprints —
+    * bounds the in-flight frontier and footprint memory. Every engine's
+    * RNG (and metapath's scheme assignment) keys on the ABSOLUTE
+    * walkerId, so the per-range start tables MUST carry the global
+    * walker ids; the union is then bitwise-identical to one big run.
+    * numWalkers ≤ 0 returns an empty (walkerId, step, vertex) frame. */
+  def epoched(spark: org.apache.spark.sql.SparkSession, numWalkers: Long, epochs: Int)(
+      walk: ((Long, Long)) => DataFrame): DataFrame = {
     val per = math.max(1L, (numWalkers + epochs - 1) / epochs)
-    (0L until numWalkers by per).map(b => (b, math.min(b + per, numWalkers)))
-  }
-
-  /** The epoch loop shared by ALL epoched variants (join and chained
-    * engines): run each walker range to completion, union the footprints.
-    * numWalkers ≤ 0 returns an empty footprint frame instead of letting
-    * `reduce` throw on the empty range list (ADVICE r4). */
-  private def epochedRun(
-      spark: org.apache.spark.sql.SparkSession, numWalkers: Long, epochs: Int)(
-      runRange: ((Long, Long)) => DataFrame): DataFrame = {
-    val ranges = epochRanges(numWalkers, epochs)
+    val ranges = (0L until numWalkers by per).map(b => (b, math.min(b + per, numWalkers)))
     if (ranges.isEmpty) {
       import spark.implicits._
       Seq.empty[(Long, Int, Long)].toDF("walkerId", "step", "vertex")
-    } else ranges.map(runRange).reduce(_ unionAll _)
+    } else ranges.map(walk).reduce(_ unionAll _)
   }
-
-  /** Epoched second-order walk — the reference's walk-rate memory bound
-    * (include/walk.hpp:140-144) is engine-generic; r3 only had it for
-    * firstOrder, leaving |V|-walker node2vec with no memory knob
-    * (VERDICT r3 #6). Each epoch's frontier (and its prevV state) is
-    * bounded by numWalkers/epochs. */
-  def node2vecEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      maxSteps: Int,
-      p: Double = 1.0,
-      q: Double = 1.0,
-      seed: Long = 42L): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      node2vec(edges, startsFor(begin, end), maxSteps, p, q, seed)
-    }
-
-  /** Epoched metapath walk (see [[node2vecEpoched]]); scheme assignment
-    * keys on absolute walkerId (walkerId % nSchemes), so per-epoch start
-    * tables MUST carry the global walker ids. */
-  def metapathEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      schemes: Seq[Seq[Seq[Boolean]]],
-      maxSteps: Int,
-      seed: Long = 42L): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      metapath(edges, startsFor(begin, end), schemes, maxSteps, seed)
-    }
-
-  /** Epoched × chained composition (VERDICT r4 #4): the reference's walk
-    * rate (include/walk.hpp:140-144) bounds in-flight walker state for
-    * EVERY engine, and the chained kernels are this engine's default perf
-    * path — at |V|-scale walker counts their per-round output cache is
-    * the memory hotspot the epoch knob exists to bound. The chained RNG
-    * keys on absolute (seed, walkerId, step) only, so epoched == one big
-    * run, bitwise (ChainSpec). The bucketed CSR is session-cached, so
-    * the epochs share one build. */
-  def firstOrderChainedEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      maxSteps: Int,
-      keepProb: Double = 1.0,
-      seed: Long = 42L,
-      buckets: Int = 0): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      firstOrderChained(edges, startsFor(begin, end), maxSteps, keepProb, seed, buckets)
-    }
-
-  /** Epoched × chained node2vec (see [[firstOrderChainedEpoched]]). */
-  def node2vecChainedEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      maxSteps: Int,
-      p: Double = 1.0,
-      q: Double = 1.0,
-      seed: Long = 42L,
-      buckets: Int = 0): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      node2vecChained(edges, startsFor(begin, end), maxSteps, p, q, seed, buckets)
-    }
-
-  /** Epoched × chained metapath (see [[firstOrderChainedEpoched]]);
-    * scheme assignment keys on absolute walkerId, so per-epoch start
-    * tables MUST carry the global walker ids. Unlike the homogeneous
-    * kernels the typed CSR is run-local (not session-cached), so each
-    * epoch rebuilds it — the trade for the bounded frontier. */
-  def metapathChainedEpoched(
-      edges: DataFrame,
-      startsFor: (Long, Long) => DataFrame,
-      numWalkers: Long,
-      epochs: Int,
-      schemes: Seq[Seq[Seq[Boolean]]],
-      maxSteps: Int,
-      seed: Long = 42L,
-      buckets: Int = 0): DataFrame =
-    epochedRun(edges.sparkSession, numWalkers, epochs) { case (begin, end) =>
-      metapathChained(edges, startsFor(begin, end), schemes, maxSteps, seed, buckets)
-    }
 
   /** Custom start distribution from an explicit start-vertex table
     * (reference W4, src/apps/ppr.hpp:41-51: walker i starts at

@@ -96,25 +96,29 @@ class ChainSpec extends SparkSpec {
       Walk.equalStarts(g, n).filter(col("walkerId") >= b && col("walkerId") < e)
     val one = fpSet(Walk.firstOrderChained(g, Walk.equalStarts(g, n), maxSteps = 6,
       keepProb = 0.8, seed = 5))
-    val ep = fpSet(Walk.firstOrderChainedEpoched(g, startsFor, n, epochs = 4,
-      maxSteps = 6, keepProb = 0.8, seed = 5))
+    val ep = fpSet(Walk.epoched(spark, n, epochs = 4) { case (b, e) =>
+      Walk.firstOrderChained(g, startsFor(b, e), maxSteps = 6, keepProb = 0.8, seed = 5)
+    })
     assert(ep === one)
     val one2 = fpSet(Walk.node2vecChained(g, Walk.equalStarts(g, n), maxSteps = 4,
       p = 2.0, q = 0.5, seed = 5))
-    val ep2 = fpSet(Walk.node2vecChainedEpoched(g, startsFor, n, epochs = 3,
-      maxSteps = 4, p = 2.0, q = 0.5, seed = 5))
+    val ep2 = fpSet(Walk.epoched(spark, n, epochs = 3) { case (b, e) =>
+      Walk.node2vecChained(g, startsFor(b, e), maxSteps = 4, p = 2.0, q = 0.5, seed = 5)
+    })
     assert(ep2 === one2)
   }
 
   test("epoched with zero walkers returns an empty footprint frame") {
     def startsFor(b: Long, e: Long) =
       Walk.equalStarts(g, 1L).filter(col("walkerId") >= b && col("walkerId") < e)
-    val fp = Walk.firstOrderChainedEpoched(g, startsFor, numWalkers = 0L, epochs = 3,
-      maxSteps = 4)
+    val fp = Walk.epoched(spark, numWalkers = 0L, epochs = 3) { case (b, e) =>
+      Walk.firstOrderChained(g, startsFor(b, e), maxSteps = 4)
+    }
     assert(fp.columns.toSeq === Seq("walkerId", "step", "vertex"))
     assert(fp.count() === 0L)
-    assert(Walk.firstOrderEpoched(g, startsFor, numWalkers = 0L, epochs = 2,
-      maxSteps = 4).count() === 0L)
+    assert(Walk.epoched(spark, numWalkers = 0L, epochs = 2) { case (b, e) =>
+      Walk.firstOrder(g, startsFor(b, e), maxSteps = 4)
+    }.count() === 0L)
   }
 
   test("chained walk transition frequencies match weights") {

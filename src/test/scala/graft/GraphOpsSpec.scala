@@ -53,7 +53,9 @@ class GraphOpsSpec extends SparkSpec {
       .orderBy("walkerId", "step").collect().toSeq
     def startsFor(b: Long, e: Long) =
       Walk.equalStarts(g, 60).filter(col("walkerId") >= b && col("walkerId") < e)
-    val epoched = Walk.firstOrderEpoched(g, startsFor, 60, epochs = 3, maxSteps = 4)
+    val epoched = Walk.epoched(spark, 60, epochs = 3) { case (b, e) =>
+        Walk.firstOrder(g, startsFor(b, e), maxSteps = 4)
+      }
       .orderBy("walkerId", "step").collect().toSeq
     assert(epoched === one)
   }
@@ -64,8 +66,9 @@ class GraphOpsSpec extends SparkSpec {
       .orderBy("walkerId", "step").collect().toSeq
     def startsFor(b: Long, e: Long) =
       Walk.equalStarts(g, 60).filter(col("walkerId") >= b && col("walkerId") < e)
-    val epoched = Walk.node2vecEpoched(g, startsFor, 60, epochs = 3, maxSteps = 4,
-        p = 2.0, q = 0.5)
+    val epoched = Walk.epoched(spark, 60, epochs = 3) { case (b, e) =>
+        Walk.node2vec(g, startsFor(b, e), maxSteps = 4, p = 2.0, q = 0.5)
+      }
       .orderBy("walkerId", "step").collect().toSeq
     assert(epoched === one)
   }
@@ -78,7 +81,9 @@ class GraphOpsSpec extends SparkSpec {
       .orderBy("walkerId", "step").collect().toSeq
     def startsFor(b: Long, e: Long) =
       Walk.equalStarts(g, 60).filter(col("walkerId") >= b && col("walkerId") < e)
-    val epoched = Walk.metapathEpoched(g, startsFor, 60, epochs = 3, schemes, maxSteps = 4)
+    val epoched = Walk.epoched(spark, 60, epochs = 3) { case (b, e) =>
+        Walk.metapath(g, startsFor(b, e), schemes, maxSteps = 4)
+      }
       .orderBy("walkerId", "step").collect().toSeq
     assert(epoched === one)
   }

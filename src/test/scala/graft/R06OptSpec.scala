@@ -14,26 +14,44 @@ class R06OptSpec extends SparkSpec {
     df.select("walkerId", "step", "vertex").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
 
+  /** The chained driver with the tail's probe row cap set. */
+  private def tailRun[W, A <: graft.model.CsrRow](fam: Walk.ChainedFamily[W, A],
+      g: org.apache.spark.sql.DataFrame, starts: org.apache.spark.sql.DataFrame,
+      maxSteps: Int, cap: Int, buckets: Int = 0, tailThreshold: Long = 4096) =
+    Walk.runChained(fam, g, starts, maxSteps, buckets, tailThreshold,
+      store = None, runName = "tail", probeRowCap = cap)
+
   test("driver tail: full-CSR probe and vertex-pruned fallback are bitwise-identical") {
     val g = randomEdges(300, 1500, seed = 906)
     val starts = Walk.equalStarts(g, 120)
-    // small tailThreshold is not needed — 120 walkers enter the tail at
-    // round 0 of the while loop only after the first cogroup round; use
-    // a large tailThreshold so the WHOLE walk runs driver-side
-    val full = fpSet(Walk.firstOrderChained(g, starts, maxSteps = 8,
-      tailThreshold = 4096))
-    val capSaved = Walk.TailFullFetchRowCap
-    try {
-      Walk.TailFullFetchRowCap = 0 // force the probe to overflow
-      Walk.releaseCaches()
-      val fallback = fpSet(Walk.firstOrderChained(g, starts, maxSteps = 8,
-        tailThreshold = 4096))
-      assert(fallback == full)
-      assert(full.nonEmpty)
-    } finally {
-      Walk.TailFullFetchRowCap = capSaved
-      Walk.releaseCaches()
-    }
+    // tailThreshold 4096 > 120 walkers: the WHOLE walk runs driver-side
+    val full = tailRun(new Walk.FirstOrderChain(1.0, 42L), g, starts, 8, Walk.TailProbeRowCap)
+    // cap 0: the CSR's row count exceeds it, so the probe is skipped
+    val fallback = tailRun(new Walk.FirstOrderChain(1.0, 42L), g, starts, 8, cap = 0)
+    assert(fpSet(fallback.footprints) == fpSet(full.footprints))
+    assert(fpSet(full.footprints).nonEmpty)
+  }
+
+  test("driver tail: a probe cap of 0 collects no CSR rows, footprints bitwise-equal") {
+    // node2vec on a hub + ring, crosserCap 1, 8 buckets: cogroup rounds
+    // run until at most 150 walkers cross, then the tail takes crossers
+    // that carry no prevNbrs and must fetch their prev vertex too
+    import spark.implicits._
+    val star = (1L to 99L).flatMap(i => Seq((0L, i, 1.0), (i, 0L, 1.0)))
+    val ring = (1L until 99L).map(i => (i, i + 1, 2.0)) :+ ((99L, 1L, 2.0))
+    val g = (star ++ ring).toDF("src", "dst", "weight")
+    val starts = Walk.equalStarts(g, 400)
+    val fam = new Walk.Node2vecChain(2.0, 0.5, 107L, crosserCap = 1)
+    def run(cap: Int) = tailRun(fam, g, starts, 8, cap, buckets = 8, tailThreshold = 150)
+    val full = run(Walk.TailProbeRowCap)
+    val capped = run(0)
+    val (tFull, tCapped) = (full.tail.get, capped.tail.get)
+    // the probe held the whole CSR (100 vertices) in one fetch
+    assert(tFull.probeRows === 100 && tFull.fetches === 1)
+    assert(tCapped.probeRows === 0 && tCapped.fetches > 1)
+    assert(tCapped.footprints === tFull.footprints)
+    assert(fpSet(capped.footprints) == fpSet(full.footprints))
+    assert(fpSet(full.footprints).nonEmpty)
   }
 
   test("pagerank: durable resume (observation lost) matches an uninterrupted run") {

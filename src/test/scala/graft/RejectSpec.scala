@@ -389,8 +389,10 @@ class RejectSpec extends SparkSpec {
     def startsFor(b: Long, e: Long) =
       Walk.equalStarts(smallGraph, 60)
         .filter(col("walkerId") >= b && col("walkerId") < e)
-    val epoched = Walk.genericRejectEpoched(smallGraph, startsFor, 60,
-        epochs = 3, maxSteps = 4, cfg, upper = 2.0, lower = 0.5, seed = 59)
+    val epoched = Walk.epoched(spark, 60, epochs = 3) { case (b, e) =>
+        Walk.genericReject(smallGraph, startsFor(b, e), maxSteps = 4, cfg,
+          upper = 2.0, lower = 0.5, seed = 59)
+      }
       .orderBy("walkerId", "step").collect().toSeq
     assert(epoched === one)
   }
