@@ -1484,11 +1484,8 @@ object Walk {
     def walkerEncoder = Encoders.product[(Long, Int, Long, Int)]
     def rowEncoder = Encoders.product[graft.model.TypedAdjRow]
     def stateCols = Seq("schemeId")
-    def csr(edges: DataFrame, rangeSize: Long) = {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      (GraphOps.bucketed(typedRows(edges).as[graft.model.TypedAdjRow], rangeSize), true)
-    }
+    def csr(edges: DataFrame, rangeSize: Long) =
+      (GraphOps.bucketed(typedRows(edges).as(rowEncoder), rangeSize), true)
     def start(starts: DataFrame) =
       starts.select(col("walkerId"), lit(0).as("step"), col("curV"),
           pmod(col("walkerId"), lit(schemes.size)).cast("int").as("schemeId"))
@@ -1519,11 +1516,8 @@ object Walk {
     def rowEncoder = Encoders.product[graft.model.EdataAdjRow]
     def stateCols = Seq("state")
     override def footprintCols = Seq("state")
-    def csr(edges: DataFrame, rangeSize: Long) = {
-      val spark = edges.sparkSession
-      import spark.implicits._
-      (GraphOps.bucketed(edataRows(edges).as[graft.model.EdataAdjRow], rangeSize), true)
-    }
+    def csr(edges: DataFrame, rangeSize: Long) =
+      (GraphOps.bucketed(edataRows(edges).as(rowEncoder), rangeSize), true)
     def start(starts: DataFrame) = {
       val init = cfg.init
       starts.select(col("walkerId"), col("curV"))
