@@ -846,14 +846,6 @@ object Walk {
     * unbounded driver-side structure. */
   val TailNbrBudget = 8L * 1024 * 1024
 
-  /** Driver-tail adjacency lookup outcome: the local map either has the
-    * row, proved the vertex dangling (a fetch asked for it and the CSR
-    * returned nothing — no out-edges), or hasn't fetched it yet. */
-  private[graft] sealed trait TailAdj[+A]
-  private[graft] final case class TailHave[A](a: A) extends TailAdj[A]
-  private[graft] case object TailDangling extends TailAdj[Nothing]
-  private[graft] case object TailUnfetched extends TailAdj[Nothing]
-
   /** Vertex-level IN-set fetch against a persisted CSR keyed by top-level
     * sorted `v`: reads o(|CSR|) rows via cached-batch min/max pruning.
     *
@@ -960,20 +952,16 @@ object Walk {
         }
         fetches += 1
       }
-      val look: Long => TailAdj[A] = v =>
-        csr.get(v) match {
-          case Some(a) => TailHave(a)
-          case None => if (dangling(v) || allFetched) TailDangling else TailUnfetched
-        }
-      // a walker left below maxSteps stopped on an unfetched vertex: parked
+      // known: the local map has the row, or a fetch proved the vertex
+      // dangling (asked for, no row returned — no out-edges)
+      val known: Long => Boolean = v => allFetched || csr.contains(v) || dangling(v)
+      val row: Long => A = v => csr.getOrElse(v, null.asInstanceOf[A])
+      // a walker that needs, or stops below maxSteps on, a vertex not
+      // known yet is parked for the next fetch
       live = live.flatMap { w0 =>
-        fam.tailRearm(w0, look) match {
-          case TailHave(w) =>
-            chainSteps(fam, maxSteps, w, look, _ => true)(out += _)
-              .filter(fam.stepOf(_) < maxSteps)
-          case TailUnfetched => Some(w0)
-          case TailDangling => None
-        }
+        if (!fam.tailNeeds(w0).forall(known)) Some(w0)
+        else fam.tailRearm(w0, row).flatMap(w =>
+          chainSteps(fam, maxSteps, w, row, known)(out += _).filter(fam.stepOf(_) < maxSteps))
       }
     }
     val tally = TailTally(walkers0.length, fetches, probeRows, out.length)
@@ -1204,8 +1192,9 @@ object Walk {
         nBuckets: Int): Dataset[W] = frontier
     /** Vertices the driver tail must hold to advance `w`. */
     def tailNeeds(w: W): Seq[Long] = Seq(vertexOf(w))
-    /** Re-arm `w` in the driver tail. */
-    def tailRearm(w: W, look: Long => TailAdj[A]): TailAdj[W] = TailHave(w)
+    /** Re-arm `w` in the driver tail, which holds all of `tailNeeds(w)`
+      * (`row` is null for a dangling vertex); None terminates it. */
+    def tailRearm(w: W, row: Long => A): Option[W] = Some(w)
   }
 
   /** A chained walk's footprints, and the tally of its driver tail if
@@ -1213,23 +1202,22 @@ object Walk {
   private[graft] final case class ChainedWalk(footprints: DataFrame, tail: Option[TailTally])
 
   /** Chain one walker: step it while its step < maxSteps and its vertex
-    * is `inRange`, emitting each footprint. Returns None when it
+    * is `inRange`, emitting each footprint; `row` gives a vertex's CSR
+    * row, null when it is dangling. Returns None when the walker
     * terminated (dangling vertex or kernel stop), else the walker where
-    * it stopped — below maxSteps, that is a vertex out of range (the
-    * cogroup's bucket) or not fetched yet (the driver tail). The cogroup
-    * kernel and the driver tail both step through here. */
+    * it stopped — below maxSteps, that is a vertex out of range: outside
+    * the cogroup's bucket, or not fetched yet in the driver tail. The
+    * cogroup kernel and the driver tail both step through here. */
   private def chainSteps[W, A <: graft.model.CsrRow](
       fam: ChainedFamily[W, A], maxSteps: Int, w0: W,
-      look: Long => TailAdj[A], inRange: Long => Boolean)(emit: W => Unit): Option[W] = {
+      row: Long => A, inRange: Long => Boolean)(emit: W => Unit): Option[W] = {
     var w = w0
     while (fam.stepOf(w) < maxSteps && inRange(fam.vertexOf(w))) {
-      look(fam.vertexOf(w)) match {
-        case TailHave(a) => fam.step(a, w) match {
-          case Some(next) => w = next; emit(fam.footprint(next))
-          case None => return None
-        }
-        case TailDangling => return None
-        case TailUnfetched => return Some(w)
+      val a = row(fam.vertexOf(w))
+      if (a == null) return None
+      fam.step(a, w) match {
+        case Some(next) => w = next; emit(fam.footprint(next))
+        case None => return None
       }
     }
     Some(w)
@@ -1328,11 +1316,10 @@ object Walk {
           val out = grouped.cogroup(adjRound) { (bucket, ws, adjIt) =>
             val rows = new scala.collection.mutable.HashMap[Long, A]
             adjIt.foreach { case (_, a) => rows.update(a.v, a) }
-            val look: Long => TailAdj[A] = v =>
-              rows.get(v).fold[TailAdj[A]](TailDangling)(TailHave(_))
+            val row: Long => A = v => rows.getOrElse(v, null.asInstanceOf[A])
             ws.flatMap { w0 =>
               val outRows = scala.collection.mutable.ArrayBuffer[(W, Boolean)]()
-              chainSteps(fam, maxSteps, w0, look, _ / rangeSize == bucket)(
+              chainSteps(fam, maxSteps, w0, row, _ / rangeSize == bucket)(
                   w => outRows += ((w, false)))
                 .filter(fam.stepOf(_) < maxSteps)
                 .foreach(w => outRows += ((fam.crosser(w), true)))
@@ -1423,14 +1410,9 @@ object Walk {
     override def capped = Some(col("prevV") >= 0 && size(col("prevNbrs")) === 0)
     override def tailNeeds(w: N2v) = if (isCapped(w)) Seq(w._3, w._4) else Seq(w._3)
     // a capped crosser's prev vertex MUST be in the CSR (the walker
-    // stepped out of it), so TailDangling cannot occur here
-    override def tailRearm(w: N2v, look: Long => TailAdj[graft.model.AdjRow]): TailAdj[N2v] =
-      if (!isCapped(w)) TailHave(w)
-      else look(w._4) match {
-        case TailHave(a) => TailHave(w.copy(_5 = a.nbrs))
-        case TailUnfetched => TailUnfetched
-        case TailDangling => TailDangling
-      }
+    // stepped out of it), so its row is never null here
+    override def tailRearm(w: N2v, row: Long => graft.model.AdjRow): Option[N2v] =
+      if (!isCapped(w)) Some(w) else Option(row(w._4)).map(a => w.copy(_5 = a.nbrs))
 
     /** One broadcast-frontier lookup join against the persisted CSR
       * re-attaches the capped prevNbrs — the hub arrays ride straight

@@ -290,11 +290,12 @@ class ChainSpec extends SparkSpec {
   val goldenMetapath = "2064:1f1b61ecf01799d0"
   val goldenStateful = "1408:3930b4553515b0c3"
 
-  private val paths2 = Seq(0L, Long.MaxValue)
+  // tailThreshold 0 runs the cogroup only, Long.MaxValue the driver tail only
+  private val bothPaths = Seq(0L, Long.MaxValue)
 
   test("golden digests: firstOrderChained, cogroup-only and tail-only") {
     val starts = Walk.equalStarts(g, 300)
-    paths2.foreach { t =>
+    bothPaths.foreach { t =>
       assert(golden(Walk.firstOrderChained(g, starts, maxSteps = 8, keepProb = 0.8,
         seed = 101, buckets = 4, tailThreshold = t)) === goldenFirstOrder, s"tailThreshold=$t")
     }
@@ -302,7 +303,7 @@ class ChainSpec extends SparkSpec {
 
   test("golden digests: node2vecChained, cogroup-only, tail-only and hub crossers") {
     val starts = Walk.equalStarts(g, 300)
-    paths2.foreach { t =>
+    bothPaths.foreach { t =>
       assert(golden(Walk.node2vecChained(g, starts, maxSteps = 6, p = 2.0, q = 0.5,
         seed = 103, buckets = 4, tailThreshold = t)) === goldenNode2vec, s"tailThreshold=$t")
     }
@@ -327,7 +328,7 @@ class ChainSpec extends SparkSpec {
       Seq(Seq(true, false, true), Seq(false, true, true)),
       Seq(Seq(true, true, false)))
     val starts = Walk.equalStarts(tg, 300)
-    paths2.foreach { t =>
+    bothPaths.foreach { t =>
       assert(golden(Walk.metapathChained(tg, starts, schemes, maxSteps = 6, seed = 109,
         buckets = 4, tailThreshold = t)) === goldenMetapath, s"tailThreshold=$t")
     }
@@ -341,7 +342,7 @@ class ChainSpec extends SparkSpec {
       update = (st, _, _, nxt) => st * 1099511628211L + nxt,
       extension = (_, st, _) => if (st % 13 == 0) 0.0 else 0.9)
     val starts = Walk.equalStarts(g, 300)
-    paths2.foreach { t =>
+    bothPaths.foreach { t =>
       val fp = Walk.genericStatefulChained(g, starts, maxSteps = 8, cfg, seed = 113,
         buckets = 4, tailThreshold = t)
       assert(fp.columns.toSeq === Seq("walkerId", "step", "vertex", "state"))
