@@ -3,7 +3,7 @@ package graft.algo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
-import graft.engine.Iterate
+import graft.engine.{Conf, Iterate}
 
 /** Weighted PageRank by power iteration over the edge table — pure
   * DataFrame joins/aggregations (north rule: "PageRank ... entirely via
@@ -19,46 +19,25 @@ import graft.engine.Iterate
   *  - the normalized edge table is computed once, repartitioned by `src`
   *    and persisted — iterations shuffle only the (small) rank vector to
   *    the edge partitioning and never re-shuffle edges;
-  *  - ONE Spark job per iteration: the dangling-mass scalar is a
-  *    broadcast 1-row cross join *inside* the step plan, and the
-  *    convergence delta is carried as a state column, so the check is a
-  *    cheap aggregate over the just-written checkpoint, not a recompute;
+  *  - about 3 Spark jobs per iteration (traced perfbench battery-small,
+  *    seed 11, 4 cores: 46 jobs for 13 iterations; 108 with adaptive
+  *    execution on). Adaptive execution is off for the setup and the
+  *    loop: AQE submits every shuffle stage as its own job, re-plans
+  *    between them and coalesces the rank state into one task. Without
+  *    it, each truncation write is one job holding all of its stages, on
+  *    `spark.sql.shuffle.partitions` tasks (the partitioning `trans`
+  *    already has), plus one job to broadcast the read-back ranks;
+  *  - the dangling-mass scalar and max|Δ| ride the truncation write as
+  *    observed metrics, so neither the convergence check nor the next
+  *    step re-scans the checkpoint;
   *  - contributions aggregate map-side (partial hash agg) before the
   *    by-dst shuffle.
+  *
+  * The output is deterministic for a fixed `spark.sql.shuffle.partitions`
+  * (AlgoSpec checks it bitwise): the observed dangling sum, which merges
+  * per-task partials in completion order, is summed exactly.
   */
 object PageRank {
-
-  /** Explain-only replica of one power-iteration step (r06 plan audit):
-    * the plan shape of [[run]]'s per-iteration job against an
-    * unpersisted uniform rank vector. Never executed by the engine. */
-  def stepPlanForExplain(edges: DataFrame): DataFrame = {
-    val alpha = 0.85
-    val verts = graft.graph.GraphOps.vertices(edges)
-    val outw = edges.groupBy(col("src")).agg(sum("weight").as("ow"))
-    val trans = edges.join(outw, "src")
-      .select(col("src"), col("dst"), (col("weight") / col("ow")).as("p"))
-    val vflag = verts
-      .join(outw.select(col("src").as("v"), lit(true).as("hasOut")), Seq("v"), "left")
-      .select(col("v"), coalesce(col("hasOut"), lit(false)).as("hasOut"))
-    val ranks = vflag.select(col("v"), col("hasOut"), lit(1e-4).as("rank"))
-    // the shipped loop injects the PREVIOUS iteration's observed dangling
-    // sum as a one-row local relation (no job, no subquery)
-    val dangling = edges.sparkSession.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(0.0)),
-      new org.apache.spark.sql.types.StructType()
-        .add("dmass", "double", nullable = false))
-    val contrib = trans
-      .join(ranks.select(col("v").as("src"), col("rank")), Seq("src"))
-      .groupBy(col("dst").as("v"))
-      .agg(sum(col("p") * col("rank")).as("c"))
-    ranks.select(col("v"), col("hasOut"), col("rank").as("prevRank"))
-      .join(contrib, Seq("v"), "left")
-      .crossJoin(broadcast(dangling))
-      .select(col("v"), col("hasOut"),
-        (lit((1.0 - alpha)) + lit(alpha) * (coalesce(col("c"), lit(0.0)) + col("dmass"))).as("rank"),
-        abs(col("rank") - col("prevRank")).as("delta"))
-      .drop("delta")
-  }
 
   /** @param fixedIter run exactly this many iterations (no convergence
     *                  checks — used by the DuckDB-mirrored oracle query)
@@ -73,7 +52,11 @@ object PageRank {
       runName: String = "pagerank",
       memTruncate: Boolean = false): DataFrame = {
     val spark = edges.sparkSession
-    graft.engine.Conf.withIterTuning(spark) {
+    // the caller's final select runs outside these scopes: a plain scan of
+    // the last truncation
+    Conf.withIterTuning(spark) {
+    Conf.withConf(spark, "spark.sql.adaptive.enabled" -> "false") {
+    Conf.withJobDescription(spark, s"$runName:setup") {
 
     // persisted: BOTH setup materializations (trans and vflag) consume
     // outw — without the cache each of the two overlapped jobs aggregates
@@ -97,29 +80,46 @@ object PageRank {
     // the two cache materializations are independent — overlap them so
     // the second back-fills executors freed by the first's stragglers
     // (guide §2.6); actions are only sequential when the driver makes
-    // them so
+    // them so. Both run in one job group: the first failure (taken in
+    // completion order) cancels the group, including a job the sibling has
+    // yet to submit, so no setup job outlives a throwing call.
     val n = {
+      val sc = spark.sparkContext
+      val group = s"$runName:setup:${java.util.UUID.randomUUID()}"
       val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+      val done = new java.util.concurrent.ExecutorCompletionService[Long](pool)
       try {
-        val ft = pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = trans.count()
+        val counts = Seq(trans, vflag).map(df => done.submit { () =>
+          sc.setJobGroup(group, s"$runName:setup", interruptOnCancel = true)
+          df.count()
         })
-        val fv = pool.submit(new java.util.concurrent.Callable[Long] {
-          def call(): Long = vflag.count()
-        })
-        ft.get()
-        fv.get().toDouble
+        counts.foreach(_ => done.take().get())
+        counts(1).get().toDouble
+      } catch {
+        case t: Throwable =>
+          sc.cancelJobGroupAndFutureJobs(group)
+          pool.shutdownNow()
+          throw t
       } finally pool.shutdown()
     }
     outw.unpersist(false)
+
+    // The dangling-rank sum D, summed exactly in decimal(38,30): observe()
+    // merges per-task partials in task-completion order, so a double sum
+    // would change from run to run once the final stage has several tasks,
+    // and every rank with it. Ranks are >= (1-α)/N, so 30 decimal places
+    // keep 20+ significant digits up to N = 10^9; the sum (<= 1) cannot
+    // overflow.
+    val dmassAgg = coalesce(
+      sum(when(!col("hasOut"), col("rank")).cast("decimal(38,30)")).cast("double"),
+      lit(0.0)).as("dmass")
 
     // r6: the checkpointed state is (v, hasOut, rank) only — the delta
     // exists solely as the observed max metric, so it no longer rides
     // every per-iteration parquet row
     val obs0 = new org.apache.spark.sql.Observation(s"$runName-m0")
     val r0 = vflag.select(col("v"), col("hasOut"), lit(1.0 / n).as("rank"))
-      .observe(obs0,
-        coalesce(sum(when(!col("hasOut"), col("rank"))), lit(0.0)).as("dmass"))
+      .observe(obs0, dmassAgg)
 
     // every truncation write carries TWO observed metrics: the max|Δ|
     // convergence check AND the state's dangling-rank sum, so iteration
@@ -130,11 +130,7 @@ object PageRank {
     // literal per iteration defeats the generated-code cache and the
     // recompile cost exceeded the saved job), and broadcasting a
     // LocalTableScan launches no job at all — one Spark job and one
-    // checkpoint scan fewer per iteration. The summed double is the SAME
-    // aggregate the subquery computed, equal up to floating-point
-    // summation order through the metric row.
-    val dmassAgg =
-      coalesce(sum(when(!col("hasOut"), col("rank"))), lit(0.0)).as("dmass")
+    // checkpoint scan fewer per iteration.
     val dmassSchema = new org.apache.spark.sql.types.StructType()
       .add("dmass", "double", nullable = false)
     // a durable run that RESUMES never executes r0's truncation, so obs0
@@ -147,8 +143,7 @@ object PageRank {
       val dmassVal: Double = curObs match {
         case Some(o) => o.get("dmass").asInstanceOf[Double]
         case None => // resumed durable run: r0's observation never executed
-          ranks.filter(!col("hasOut"))
-            .agg(coalesce(sum("rank"), lit(0.0))).head().getDouble(0)
+          ranks.agg(dmassAgg).head().getDouble(0)
       }
       val dangling = spark.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(dmassVal)), dmassSchema)
@@ -183,10 +178,11 @@ object PageRank {
 
     val out = Iterate.run(runName, r0, step, converged, maxIter, fixedIter, store,
         memTruncate)
-      .select(col("v"), col("rank"))
     trans.unpersist(false)
     vflag.unpersist(false)
     out
     }
+    }
+    }.select(col("v"), col("rank"))
   }
 }

@@ -5,8 +5,10 @@ import org.apache.spark.sql.SparkSession
 /** Scoped session-conf overrides for the iterative engines (save → set →
   * run → restore, the same pattern as Walk.fetchByVertex).
   *
-  * The one standing override ([[withIterTuning]]) pins AQE's small-
-  * partition coalescing to DATA size instead of core count:
+  * Two standing overrides. PageRank.run turns adaptive execution off for
+  * its setup and power loop (see its doc). Every iterative engine runs
+  * under [[withIterTuning]], which pins AQE's small-partition coalescing
+  * to DATA size instead of core count:
   * `coalescePartitions.parallelismFirst=false` makes every post-shuffle
   * partition target `advisoryPartitionSizeInBytes` (64 MB default) rather
   * than splitting tiny states across `defaultParallelism` partitions.
@@ -42,4 +44,15 @@ object Conf {
     withConf(spark,
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.join.preferSortMergeJoin" -> "false")(body)
+
+  /** Run `body` with `desc` as the job description of the Spark jobs this
+    * thread starts, restoring the caller's description afterwards, also
+    * when `body` throws. */
+  def withJobDescription[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val old = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body
+    finally sc.setJobDescription(old)
+  }
 }

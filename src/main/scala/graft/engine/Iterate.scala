@@ -29,7 +29,9 @@ object Iterate {
 
     /** Truncation-only save: durable write + read-back, no lineage rows
       * (used for anonymous in-run truncation where metrics aren't kept).
-      * Deletes the iteration before last to bound disk usage. */
+      * Deletes the iteration before last to bound disk usage. Both saves
+      * read back with the written frame's schema, so the read-back infers
+      * no schema (one Spark job fewer per truncation). */
     def saveNoLineage(name: String, iter: Int, df: DataFrame): DataFrame = {
       val p = iterPath(name, iter)
       df.write.mode("overwrite").parquet(p)
@@ -37,14 +39,14 @@ object Iterate {
         val old = new org.apache.hadoop.fs.Path(iterPath(name, iter - 2))
         try fs(old).delete(old, true) catch { case _: Throwable => () }
       }
-      spark.read.parquet(p)
+      spark.read.schema(df.schema).parquet(p)
     }
 
     def save(name: String, iter: Int, df: DataFrame): DataFrame = {
       val p = iterPath(name, iter)
       val t0 = System.nanoTime()
       df.write.mode("overwrite").parquet(p)
-      val out = spark.read.parquet(p)
+      val out = spark.read.schema(df.schema).parquet(p)
       val wallMs = (System.nanoTime() - t0) / 1000000
       // per-partition lineage row: (runId, iter, partId, rows, wallMs)
       val lineage = out
@@ -123,6 +125,10 @@ object Iterate {
     *
     * `converged(prev, next, iter)` may run Spark actions (e.g. a max-delta
     * aggregate); it is skipped when `fixedIter` pins the iteration count.
+    *
+    * Every job of iteration k (its step, truncation and convergence check)
+    * runs with the job description `<name>:iter=<k>`; the initial state's
+    * truncation is `iter=0`.
     */
   def run(
       name: String,
@@ -133,6 +139,7 @@ object Iterate {
       fixedIter: Option[Int] = None,
       store: Option[CheckpointStore] = None,
       memTruncate: Boolean = false): DataFrame = {
+    val spark = state0.sparkSession
 
     // Plan truncation MUST also reset plan statistics, not just lineage:
     // localCheckpoint's LogicalRDD carries the *estimated* stats of the
@@ -159,7 +166,7 @@ object Iterate {
       // DataFrame lazily); register the dir with the single process-wide
       // sweeper — one hook per JVM, not one per run()
       registerTempDir(dir)
-      new CheckpointStore(dir.toString, state0.sparkSession)
+      new CheckpointStore(dir.toString, spark)
     }
     // memTruncate: serialized in-memory truncation — persist+count gives
     // real InMemoryRelation stats, localCheckpoint(SER) then cuts the tree
@@ -182,16 +189,18 @@ object Iterate {
 
     var (iter0, state) = store.flatMap(_.latest(name)) match {
       case Some((i, df)) => (i, df)
-      case None => (0, truncate(state0, 0))
+      case None => (0, Conf.withJobDescription(spark, s"$name:iter=0")(truncate(state0, 0)))
     }
     val last = fixedIter.getOrElse(maxIter)
     var iter = iter0
     var done = false
     while (iter < last && !done) {
       val t0 = System.nanoTime()
-      val next = truncate(step(state, iter), iter + 1)
-      done = fixedIter.isEmpty && converged(state, next, iter + 1)
-      state = next
+      Conf.withJobDescription(spark, s"$name:iter=${iter + 1}") {
+        val next = truncate(step(state, iter), iter + 1)
+        done = fixedIter.isEmpty && converged(state, next, iter + 1)
+        state = next
+      }
       iter += 1
       // reference X4 per-step progress log (include/walk.hpp:928-933)
       System.err.println(f"[graft:$name] iter=$iter wall=${(System.nanoTime() - t0) / 1e9}%.2fs done=$done")

@@ -66,8 +66,6 @@ object BenchExtra {
     val e = edges.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     e.count()
 
-    // pagerank: the per-iteration step plan (dangling + contrib + rank join)
-    dump("pagerank_step", PageRank.stepPlanForExplain(e))
     dump("cc_round", Components.roundPlanForExplain(e))
     dump("lpa_step", LabelProp.stepPlanForExplain(e))
     dump("triangles", Triangles.planForExplain(e))

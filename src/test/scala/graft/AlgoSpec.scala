@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.algo.{Components, LabelProp, PageRank, Triangles}
+import graft.engine.Iterate
 
 /** Exact in-test oracles (FIXTURES.md §5): dense power iteration, union-
   * find, reference LPA, brute-force triangles — all driver-side doubles. */
@@ -44,6 +45,97 @@ class AlgoSpec extends SparkSpec {
     val maxDelta = got.map { case (v, r) => math.abs(r - exp(v)) }.max
     assert(maxDelta < 1e-5, s"maxDelta=$maxDelta")
     assert(math.abs(got.values.sum - 1.0) < 1e-9)
+  }
+
+  test("PageRank is bitwise deterministic with many dangling vertices and several tasks") {
+    // every vertex id divisible by 3 loses its out-edges: a large
+    // dangling mass, summed over 8 post-shuffle tasks each iteration
+    val g = randomEdges(40000, 120000, seed = 11).filter(col("src") % 3 =!= 0)
+    val runs = graft.engine.Conf.withConf(spark, "spark.sql.shuffle.partitions" -> "8") {
+      (1 to 6).map { _ =>
+        val ranks = PageRank.run(g, tol = 1e-9).collect()
+          .map(r => r.getLong(0) -> java.lang.Double.doubleToRawLongBits(r.getDouble(1)))
+          .sorted.toSeq
+        (ranks, Iterate.lastIterations)
+      }
+    }
+    runs.tail.foreach { case (ranks, iters) =>
+      assert(iters === runs.head._2)
+      assert(ranks.size === runs.head._1.size)
+      val differing = ranks.zip(runs.head._1).count { case (a, b) => a != b }
+      assert(differing === 0)
+    }
+  }
+
+  test("PageRank labels every job it starts and restores the caller's description") {
+    val sc = spark.sparkContext
+    val g = randomEdges(vNum = 100, eNum = 400, seed = 5)
+    val descs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        descs.add(Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description"))).getOrElse(""))
+    }
+    sc.setJobDescription("caller")
+    sc.addSparkListener(l)
+    try {
+      PageRank.run(g, tol = 1e-6)
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+    val all = descs.toArray(Array.empty[String]).toSeq
+    assert(all.nonEmpty)
+    assert(all.forall(_.startsWith("pagerank:")), all.distinct)
+    Seq("pagerank:setup", "pagerank:iter=0", "pagerank:iter=1").foreach(d =>
+      assert(all.contains(d), all.distinct))
+  }
+
+  test("PageRank setup failure cancels the sibling setup job before run throws") {
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    // 20 ms per edge row: one pass over the edges takes about 10 s on 4
+    // cores, so an uncancelled sibling either outlives run or makes run
+    // wait for it to succeed. The checkpoint keeps the optimizer from
+    // evaluating the UDF over the local rows while planning.
+    val slow = udf { (w: Double) => Thread.sleep(20); w }
+    val g = randomEdges(vNum = 200, eNum = 2000, seed = 13).localCheckpoint()
+      .withColumn("weight", slow(col("weight")))
+    // cancel the first setup job; count the setup jobs that succeed anyway
+    val setupJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val succeeded = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "pagerank:setup")) {
+          if (setupJobs.isEmpty) sc.cancelJob(e.jobId)
+          setupJobs.add(e.jobId)
+        }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (setupJobs.contains(e.jobId) && e.jobResult == org.apache.spark.scheduler.JobSucceeded)
+          succeeded.incrementAndGet()
+    }
+    sc.setJobDescription("caller")
+    sc.addSparkListener(l)
+    try {
+      intercept[Exception](PageRank.run(g))
+      assert(sc.getLocalProperty("spark.job.description") === "caller")
+      // a sibling still being planned when run threw submits its job within
+      // this wait; left uncancelled, that job then runs for about 10 s
+      Thread.sleep(1000)
+      eventually(timeout(3.seconds), interval(50.millis)) {
+        assert(sc.statusTracker.getActiveJobIds().isEmpty)
+      }
+      org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc)
+    } finally {
+      sc.removeSparkListener(l)
+      sc.setJobDescription(null)
+    }
+    assert(!setupJobs.isEmpty)
+    // the sibling was cancelled, not left to finish before run threw
+    assert(succeeded.get === 0)
   }
 
   test("connected components match union-find exactly (incl. long chains)") {
